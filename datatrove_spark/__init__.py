@@ -5,9 +5,9 @@ row-oriented Python generator-pipeline at /root/reference) as idiomatic,
 declarative Spark DataFrame transformations:
 
 - readers/writers          -> spark.read / df.write (+ dynamic partitioned sinks)
-- per-document filters     -> native Column expressions (whole-stage codegen),
-                              with pandas-UDF kernels only where semantics
-                              genuinely need imperative per-doc logic
+- per-document filters     -> one implementation each: Arrow-batched
+                              pandas-UDF kernels for the text-heavy filters,
+                              native Column expressions where one suffices
 - formatters (PII, ...)    -> compiled-regex batch transforms
 - dedup (minhash/url/...)  -> shuffle/window/join-based distributed algorithms
                               instead of the reference's sorted-file k-way merges

@@ -1,6 +1,6 @@
 """Single source of truth for every threshold / constant in the engine.
 
-The same dataclasses parameterize (a) the Spark column-expression operators,
+The same dataclasses parameterize (a) the Spark operators,
 (b) the pure-Python single-document reference implementation used as the
 pytest parity oracle (datatrove semantics re-derived, not copied), and
 (c) the ANSI-SQL oracle strings handed to DuckDB by __spark_entry__.py.
@@ -32,8 +32,6 @@ from dataclasses import dataclass, field
 # Shared regexes (RE2-compatible: no lookarounds/backrefs, so the exact same
 # pattern runs in Java (Spark), Python re, and DuckDB RE2).
 WORD_RE = r"\S+"
-ALNUM_RE = "[A-Za-z0-9]"
-ALPHA_RE = "[A-Za-z]"
 CITATION_RE = r"\[\d*\]|\[edit\]|\[citation needed\]"  # c4_filters.py:14
 # token-count regex, BPE-ish granularity (letters / digit runs / symbol runs)
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"

@@ -1,13 +1,14 @@
 """Native Spark Column builders for text analysis.
 
 Everything here compiles to JVM expressions inside whole-stage codegen — no
-Python in the hot path. These are the shared vocabulary of all quality
-filters (SURVEY.md section 2.4).
+Python in the hot path. Operators whose per-document work is a plain Column
+expression (exact dedup, formatters, token stats, unigram/n-gram scoring)
+share them.
 
-Engine text semantics (shared with the Python and SQL oracles):
+Engine text semantics (shared with the Python kernels in
+reference_impl/filters.py and the SQL oracles):
 - words            = regexp matches of \\S+ (see config.py TOKENIZER NOTE)
 - lines            = split(text, '\\n')
-- paragraphs       = regexp-split of trimmed text on \\n{2,}
 - simplified text  = lowercase, non-alphanumeric runs -> single space,
                      digit runs -> '0', trimmed  (dedup canonicalization;
                      portable restriction of reference simplify_text,
@@ -19,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from datatrove_spark.config import ALNUM_RE, ALPHA_RE, TOKEN_RE, WORD_RE
+from datatrove_spark.config import TOKEN_RE, WORD_RE
 
 
 def words(text: Column | str) -> Column:
@@ -27,32 +28,8 @@ def words(text: Column | str) -> Column:
     return F.regexp_extract_all(F.col(text) if isinstance(text, str) else text, F.lit(WORD_RE), 0)
 
 
-def non_symbol_words(ws: Column) -> Column:
-    """Words containing at least one alphanumeric char (stand-in for the
-    reference's 'not all punctuation' test, gopher_quality_filter.py:76)."""
-    return F.filter(ws, lambda w: w.rlike(ALNUM_RE))
-
-
-def alpha_words(ws: Column) -> Column:
-    """Words containing at least one ASCII letter (gopher_quality_filter.py:117)."""
-    return F.filter(ws, lambda w: w.rlike(ALPHA_RE))
-
-
 def lines(text: Column | str) -> Column:
     return F.split(F.col(text) if isinstance(text, str) else text, "\n", -1)
-
-
-def non_empty_lines(text: Column | str) -> Column:
-    """Split on runs of newlines -> no empty elements for inner lines
-    (gopher_repetition_filter.py:107 uses \\n+)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(trim_ws(c), r"\n+", -1)
-
-
-def paragraphs(text: Column | str) -> Column:
-    """Split trimmed text on blank-line runs (gopher_repetition_filter.py:106)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(trim_ws(c), r"\n{2,}", -1)
 
 
 def trim_ws(c: Column) -> Column:
@@ -68,39 +45,6 @@ def simplify_text(text: Column | str) -> Column:
     s = F.regexp_replace(s, "[^a-z0-9]+", " ")
     s = F.regexp_replace(s, "[0-9]+", "0")
     return F.trim(s)
-
-
-def substr_count(text: Column, sub: str) -> Column:
-    """Number of non-overlapping occurrences of a literal substring
-    (Python str.count parity via length difference)."""
-    c = text
-    return (F.length(c) - F.length(F.replace(c, F.lit(sub), F.lit("")))) / len(sub)
-
-
-def char_count(text: Column, ch: str) -> Column:
-    return F.length(text) - F.length(F.replace(text, F.lit(ch), F.lit("")))
-
-
-def word_ngrams(ws: Column, n: int) -> Column:
-    """Array of space-joined word n-grams (gopher_repetition_filter.py:31-32).
-    Empty array when fewer than n words (NB: F.sequence(0, -1) would count
-    DOWN, so the short case must be guarded explicitly)."""
-    grams = F.transform(
-        F.sequence(F.lit(0), F.size(ws) - n),
-        lambda i: F.array_join(F.slice(ws, i + 1, n), " "),
-    )
-    return F.when(F.size(ws) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
-def sentences(text: Column | str) -> Column:
-    """Portable sentence splitter stand-in: maximal runs ending in [.!?]+.
-
-    The reference uses NLTK punkt sent_tokenize; this engine defines sentences
-    as regexp matches of [^.!?]*[.!?]+ (trailing fragment without terminal
-    punctuation is ignored) so Spark/Python/SQL agree exactly.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_extract_all(c, F.lit(r"[^.!?]+[.!?]+"), 0)
 
 
 def token_count(text: Column | str) -> Column:

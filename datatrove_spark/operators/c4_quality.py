@@ -1,5 +1,5 @@
-"""C4 quality filter — fully native Spark column expressions, including the
-text REWRITE (kept-lines only), with a first-triggering-line doc-drop rule.
+"""C4 quality filter, including the text REWRITE (kept lines only), with a
+first-triggering-line doc-drop rule.
 
 Semantics of reference C4QualityFilter (src/datatrove/pipeline/filters/
 c4_filters.py:88-135), per line (in scan order):
@@ -12,103 +12,51 @@ c4_filters.py:88-135), per line (in scan order):
   - DOC drop 'curly_bracket' if line contains '{'               (:122)
   - drop line containing a policy substring                     (:125)
   - DOC drop 'too_few_sentences' if kept-line sentences < 5     (:131)
-Kept lines are joined back with newlines (:134) — the doc text rewrite.
+Kept lines are joined back with newlines (:134) — the doc text rewrite. A
+dropped document keeps its input text.
 
-A document-level drop reason comes from the FIRST line (in document order)
-that triggers one, matching the reference's sequential scan. Everything is
-expressed with higher-order array functions over the split lines — one pass,
-JVM codegen, no Python, no shuffle.
+Spark runs one Arrow-batched pandas UDF over the engine's Python kernel
+(reference_impl.filters.c4_quality, the same kernel the fused battery
+runs); ``oracle_sql`` is the independent DuckDB rendering. NULL text is an
+empty document (reason too_few_sentences, text '').
 
-Sentence counting uses the engine's portable splitter (functions/text.py
-sentences) instead of NLTK punkt — see config.py TOKENIZER NOTE.
+Sentence counting uses the engine's portable splitter
+(reference_impl.filters.sentences) instead of NLTK punkt — see config.py
+TOKENIZER NOTE.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import CITATION_RE, C4QualityConfig, POLICY_SUBSTRINGS
-from datatrove_spark.functions import text as T
 
 NAME = "c4_quality"
 
-_TERM_PUNCT_RE = "[.?!\"']$"
 
+def make_udf(cfg: C4QualityConfig = C4QualityConfig()):
+    @F.pandas_udf("reason string, text string")
+    def c4_quality_kernel(texts: pd.Series) -> pd.DataFrame:
+        from datatrove_spark.reference_impl.filters import c4_quality
 
-def _line_struct(ln: Column, cfg: C4QualityConfig) -> Column:
-    s = T.trim_ws(ln)
-    ws = F.regexp_extract_all(s, F.lit(r"\S+"), 0)
-    too_long = (
-        F.exists(ws, lambda w: F.length(w) > cfg.max_word_length)
-        if cfg.max_word_length != -1
-        else F.lit(False)
-    )
-    line2 = F.regexp_replace(s, CITATION_RE, "") if cfg.remove_citations else s
-    term_ok = (
-        line2.rlike(_TERM_PUNCT_RE) & ~line2.rlike(r"\.\.\.$")
-        if cfg.filter_no_terminal_punct
-        else F.lit(True)
-    )
-    survives_pre = ~too_long & term_ok & (F.size(ws) >= cfg.min_words_per_line)
-    low = F.lower(line2)
-    lorem = F.contains(low, F.lit("lorem ipsum")) if cfg.filter_lorem_ipsum else F.lit(False)
-    js = F.contains(low, F.lit("javascript")) if cfg.filter_javascript else F.lit(False)
-    curly = F.contains(line2, F.lit("{")) if cfg.filter_curly_bracket else F.lit(False)
-    policy = (
-        # fold the fixed substring list into an OR chain
-        F.lit(False) if not cfg.filter_policy else _any_contains(low, POLICY_SUBSTRINGS)
-    )
-    doc_reason = F.when(survives_pre & lorem, "lorem_ipsum").when(
-        survives_pre & ~js & curly, "curly_bracket"
-    )
-    kept = survives_pre & ~js & ~policy
-    return F.struct(
-        doc_reason.alias("doc_reason"),
-        kept.alias("kept"),
-        F.when(kept, F.size(T.sentences(line2))).otherwise(F.lit(0)).alias("sents"),
-        line2.alias("line"),
-    )
+        pairs = [c4_quality(t, cfg) for t in texts]
+        return pd.DataFrame({"reason": [p[0] for p in pairs], "text": [p[1] for p in pairs]})
 
-
-def _any_contains(low: Column, subs: tuple[str, ...]) -> Column:
-    cond = F.lit(False)
-    for s in subs:
-        cond = cond | F.contains(low, F.lit(s))
-    return cond
-
-
-def columns(
-    text_col: Column, cfg: C4QualityConfig = C4QualityConfig()
-) -> tuple[Column, Column]:
-    """Returns (reason, rewritten_text) columns."""
-    structs = F.transform(T.lines(text_col), lambda ln: _line_struct(ln, cfg))
-    first_doc_reason = F.get(
-        F.filter(structs, lambda st: st["doc_reason"].isNotNull()), 0
-    )["doc_reason"]
-    num_sentences = F.aggregate(structs, F.lit(0), lambda acc, st: acc + st["sents"])
-    reason = F.coalesce(
-        first_doc_reason,
-        F.when(num_sentences < cfg.min_num_sentences, "too_few_sentences"),
-    )
-    kept_text = T.trim_ws(
-        F.array_join(
-            F.transform(F.filter(structs, lambda st: st["kept"]), lambda st: st["line"]), "\n"
-        )
-    )
-    # on drop, the text is left untouched (reference returns before mutating)
-    new_text = F.when(reason.isNull(), kept_text).otherwise(text_col)
-    return reason, new_text
+    return c4_quality_kernel
 
 
 def apply(
     df: DataFrame, text_col: str = "text", cfg: C4QualityConfig = C4QualityConfig()
 ) -> DataFrame:
-    reason, new_text = columns(F.col(text_col), cfg)
+    res = make_udf(cfg)(F.col(text_col))
     return (
-        df.withColumn(f"{NAME}_reason", reason)
+        df.withColumn("__c4", res)
+        .withColumn(f"{NAME}_reason", F.col("__c4.reason"))
         .withColumn(f"{NAME}_keep", F.col(f"{NAME}_reason").isNull())
-        .withColumn(f"{NAME}_text", new_text)
+        .withColumn(f"{NAME}_text", F.col("__c4.text"))
+        .drop("__c4")
     )
 
 
@@ -123,7 +71,8 @@ def oracle_sql(
     citation = CITATION_RE.replace("'", "''")
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, {text_col} AS t, string_split({text_col}, chr(10)) AS lns FROM {table}
+  SELECT {id_col} AS id, t, string_split(t, chr(10)) AS lns
+  FROM (SELECT {id_col}, coalesce({text_col}, '') AS t FROM {table})
 ), feat AS (
   SELECT id, t,
     list_transform(lns, raw -> {{

@@ -128,7 +128,11 @@ def apply(
         idx_counts = {
             int(r["cell"]): r["count"] for r in assigned.groupBy("cell").count().collect()
         }
-        counts = {cell_ids[i]: n for i, n in idx_counts.items()}
+        # sum, not overwrite: a codebook may repeat a centroid id, and the
+        # literal path's groupBy on the relabeled cell sums those rows too
+        counts: dict[int, int] = {}
+        for i, n in idx_counts.items():
+            counts[cell_ids[i]] = counts.get(cell_ids[i], 0) + n
         rates = rates_from_counts(counts, alpha, budget_frac)
         rates_df = df.sparkSession.createDataFrame(
             [

@@ -19,25 +19,15 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
-from datatrove_spark.functions import text as T
-from datatrove_spark.functions.hashing import hash60, py_hash60, sql_hash60
+from datatrove_spark.functions.hashing import py_hash60, sql_hash60
 
 NAME = "decont"
 DEFAULT_N = 12
 
 
-def ngram_hashes_native(text_col: Column, n: int = DEFAULT_N) -> Column:
-    """Declarative rendering (documentation / cross-check): identical values
-    to py_ngram_hashes, but lambda higher-order functions run interpreted
-    (no codegen) — measured ~15x slower than the Arrow kernel below on real
-    docs, same reason operators/minhash.py uses a numpy kernel."""
-    ws = T.words(T.simplify_text(text_col))
-    return F.array_distinct(F.transform(T.word_ngrams(ws, n), lambda g: hash60(g)))
-
-
 def py_ngram_hashes(text: str, n: int = DEFAULT_N) -> list[int]:
     """Per-doc kernel: distinct simplified-text n-gram h60 hashes — shares
-    simplify/h60 definitions with the SQL oracle and the native column."""
+    simplify/h60 definitions with the SQL oracle."""
     from datatrove_spark.reference_impl.filters import simplify_text
 
     ws = simplify_text(text or "").split()
@@ -48,7 +38,8 @@ def py_ngram_hashes(text: str, n: int = DEFAULT_N) -> list[int]:
 
 
 def ngram_hashes(text_col: Column, n: int = DEFAULT_N) -> Column:
-    """Arrow-batched kernel form of ngram_hashes_native (the hot path)."""
+    """Arrow-batched py_ngram_hashes: lambda higher-order Column functions
+    would run interpreted (no codegen), measured ~15x slower on real docs."""
 
     @F.pandas_udf(ArrayType(LongType()))
     def k(texts: Series) -> Series:

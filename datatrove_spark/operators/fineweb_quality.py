@@ -1,4 +1,4 @@
-"""FineWeb quality filter — fully native Spark column expressions.
+"""FineWeb quality filter.
 
 Semantics of reference FineWebQualityFilter
 (src/datatrove/pipeline/filters/fineweb_quality_filter.py:31-54), in order:
@@ -7,69 +7,38 @@ Semantics of reference FineWebQualityFilter
   3 char_dup_ratio     duplicated-line chars / text chars >= 0.01  (:43-46)
   4 list_ratio         newlines / words > 0.3 -> drop              (:49-52)
 
-The duplicated-line char count (occurrences after the first of each distinct
-non-empty line) is computed with an O(lines^2) higher-order-function
-expression — entirely JVM-side; per-document line counts are small, and no
-shuffle is ever needed for this per-doc statistic.
+Spark runs one Arrow-batched pandas UDF over the engine's Python kernel
+(reference_impl.filters.fineweb_quality, the same kernel the fused battery
+runs); ``oracle_sql`` is the independent DuckDB rendering. NULL text is an
+empty document.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from datatrove_spark.config import FineWebQualityConfig
-from datatrove_spark.functions import text as T
 
 NAME = "fineweb_quality"
 
-_PUNCT_END_RE = "[.'\"!?]$"  # FINEWEB_STOP_CHARS as a regex class
 
+def make_udf(cfg: FineWebQualityConfig = FineWebQualityConfig()):
+    @F.pandas_udf(StringType())
+    def fineweb_quality_reason(texts: pd.Series) -> pd.Series:
+        from datatrove_spark.reference_impl.filters import fineweb_quality
 
-def reason(text_col: Column, cfg: FineWebQualityConfig = FineWebQualityConfig()) -> Column:
-    lns = T.lines(text_col)
-    n_lines = F.size(lns)
-    punct_ratio = F.size(F.filter(lns, lambda ln: ln.rlike(_PUNCT_END_RE))).cast("double") / n_lines
-    short_ratio = (
-        F.size(F.filter(lns, lambda ln: F.length(ln) <= cfg.short_line_length)).cast("double")
-        / n_lines
-    )
-    nel = F.filter(lns, lambda ln: T.trim_ws(ln) != "")  # strip ALL whitespace (Python str.strip parity)
-    # chars in line occurrences after the first of each distinct line:
-    # for index i (0-based), count len if the line appears among the first i
-    dup_chars = F.aggregate(
-        F.transform(
-            nel,
-            lambda ln, i: F.when(F.array_position(F.slice(nel, 1, i), ln) > 0, F.length(ln)).otherwise(
-                F.lit(0)
-            ),
-        ),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    text_wo_nl_len = F.length(F.replace(text_col, F.lit("\n"), F.lit("")))
-    nl_count = T.char_count(text_col, "\n")
-    n_words = F.size(T.words(text_col))
+        return texts.map(lambda t: fineweb_quality(t, cfg))
 
-    drop_punct = punct_ratio <= cfg.line_punct_thr
-    if cfg.line_punct_exclude_zero:
-        drop_punct = drop_punct & (punct_ratio != 0.0)
-    return (
-        F.when(drop_punct, "line_punct_ratio")
-        .when(short_ratio >= cfg.short_line_thr, "short_line_ratio")
-        .when(
-            dup_chars.cast("double") / text_wo_nl_len >= cfg.char_duplicates_ratio,
-            "char_dup_ratio",
-        )
-        .when(nl_count.cast("double") / n_words > cfg.new_line_ratio, "list_ratio")
-        .otherwise(F.lit(None).cast("string"))
-    )
+    return fineweb_quality_reason
 
 
 def apply(
     df: DataFrame, text_col: str = "text", cfg: FineWebQualityConfig = FineWebQualityConfig()
 ) -> DataFrame:
-    r = reason(F.col(text_col), cfg)
+    r = make_udf(cfg)(F.col(text_col))
     return df.withColumn(f"{NAME}_reason", r).withColumn(f"{NAME}_keep", F.col(f"{NAME}_reason").isNull())
 
 
@@ -82,10 +51,10 @@ def oracle_sql(
     zero_guard = "AND punct_ratio != 0" if cfg.line_punct_exclude_zero else ""
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, {text_col} AS t,
-         string_split({text_col}, chr(10)) AS lns,
-         list_filter(string_split({text_col}, chr(10)), l -> trim(l, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) != '') AS nel
-  FROM {table}
+  SELECT {id_col} AS id, t,
+         string_split(t, chr(10)) AS lns,
+         list_filter(string_split(t, chr(10)), l -> trim(l, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) != '') AS nel
+  FROM (SELECT {id_col}, coalesce({text_col}, '') AS t FROM {table})
 ), feat AS (
   SELECT id, t,
     len(lns) AS n_lines,

@@ -1,10 +1,14 @@
-"""Gopher quality heuristics as native Spark column expressions.
+"""Gopher quality heuristics.
 
 Semantics of reference GopherQualityFilter
-(src/datatrove/pipeline/filters/gopher_quality_filter.py:62-125), re-expressed
-declaratively: ten thresholded checks evaluated in reference order; the first
-failing check's reason string is recorded. Entirely JVM-side (whole-stage
-codegen) — zero Python in the hot path.
+(src/datatrove/pipeline/filters/gopher_quality_filter.py:62-125): ten
+thresholded checks evaluated in reference order; the first failing check's
+reason string is recorded.
+
+Spark runs one Arrow-batched pandas UDF over the engine's Python kernel
+(reference_impl.filters.gopher_quality, the same kernel the fused battery
+runs); ``oracle_sql`` is the independent DuckDB rendering of the same rules.
+NULL text is an empty document.
 
 Rule order and reason strings (gopher_quality_filter.py):
   1 gopher_short_doc            non-symbol words < min_doc_words          (:80)
@@ -21,63 +25,29 @@ Rule order and reason strings (gopher_quality_filter.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import pandas as pd
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
-from datatrove_spark.config import ALPHA_RE, GopherQualityConfig
-from datatrove_spark.functions import text as T
+from datatrove_spark.config import GopherQualityConfig
 
 NAME = "gopher_quality"
 
 
-def reason(text_col: Column, cfg: GopherQualityConfig = GopherQualityConfig()) -> Column:
-    ws = T.words(text_col)
-    nsw = T.non_symbol_words(ws)
-    n_words = F.size(ws)
-    n_nsw = F.size(nsw)
-    nsw_len_sum = F.aggregate(nsw, F.lit(0), lambda acc, w: acc + F.length(w))
-    avg_len = nsw_len_sum.cast("double") / n_nsw  # null when n_nsw = 0 (guarded by rule 1)
+def make_udf(cfg: GopherQualityConfig = GopherQualityConfig()):
+    @F.pandas_udf(StringType())
+    def gopher_quality_reason(texts: pd.Series) -> pd.Series:
+        from datatrove_spark.reference_impl.filters import gopher_quality
 
-    lns = T.lines(text_col)
-    n_lines = F.size(lns)
-    bullet_lines = F.size(F.filter(lns, lambda ln: F.regexp_replace(ln, r"^\s+", "").rlike(r"^(•|-)")))
-    ellipsis_lines = F.size(
-        F.filter(lns, lambda ln: F.regexp_replace(ln, r"\s+$", "").rlike(r"(\.\.\.|…)$"))
-    )
-    hash_ratio = T.char_count(text_col, "#").cast("double") / n_words
-    ellipsis_ratio = (T.substr_count(text_col, "...") + T.char_count(text_col, "…")).cast(
-        "double"
-    ) / n_words
-    n_alpha = F.size(F.filter(ws, lambda w: w.rlike(ALPHA_RE)))
-    stop_hits = F.size(F.filter(ws, lambda w: w.isin(*cfg.stop_words)))
+        return texts.map(lambda t: gopher_quality(t, cfg))
 
-    return (
-        F.when(n_nsw < cfg.min_doc_words, "gopher_short_doc")
-        .when(n_nsw > cfg.max_doc_words, "gopher_long_doc")
-        .when(avg_len < cfg.min_avg_word_length, "gopher_below_avg_threshold")
-        .when(avg_len > cfg.max_avg_word_length, "gopher_above_avg_threshold")
-        .when(hash_ratio > cfg.max_symbol_word_ratio, "gopher_too_many_hashes")
-        .when(ellipsis_ratio > cfg.max_symbol_word_ratio, "gopher_too_many_ellipsis")
-        .when(
-            bullet_lines.cast("double") / n_lines > cfg.max_bullet_lines_ratio,
-            "gopher_too_many_bullets",
-        )
-        .when(
-            ellipsis_lines.cast("double") / n_lines > cfg.max_ellipsis_lines_ratio,
-            "gopher_too_many_end_ellipsis",
-        )
-        .when(
-            n_alpha.cast("double") / n_words < cfg.max_non_alpha_words_ratio,
-            "gopher_below_alpha_threshold",
-        )
-        .when(stop_hits < cfg.min_stop_words, "gopher_enough_stop_words")
-        .otherwise(F.lit(None).cast("string"))
-    )
+    return gopher_quality_reason
 
 
 def apply(df: DataFrame, text_col: str = "text", cfg: GopherQualityConfig = GopherQualityConfig()) -> DataFrame:
-    r = reason(F.col(text_col), cfg)
-    return df.withColumn(f"{NAME}_reason", r).withColumn(f"{NAME}_keep", r.isNull())
+    r = make_udf(cfg)(F.col(text_col))
+    return df.withColumn(f"{NAME}_reason", r).withColumn(f"{NAME}_keep", F.col(f"{NAME}_reason").isNull())
 
 
 def oracle_sql(
@@ -90,10 +60,10 @@ def oracle_sql(
     stop_list = ", ".join(f"'{w}'" for w in cfg.stop_words)
     return f"""
 WITH base AS (
-  SELECT {id_col} AS id, {text_col} AS t,
-         regexp_extract_all({text_col}, '\\S+') AS ws,
-         string_split({text_col}, chr(10)) AS lns
-  FROM {table}
+  SELECT {id_col} AS id, t,
+         regexp_extract_all(t, '\\S+') AS ws,
+         string_split(t, chr(10)) AS lns
+  FROM (SELECT {id_col}, coalesce({text_col}, '') AS t FROM {table})
 ), feat AS (
   SELECT id,
     len(ws) AS n_words,

@@ -1,10 +1,11 @@
-"""Language identification — stopword-profile n-gram heuristic, JVM-native.
+"""Language identification — stopword-profile n-gram heuristic.
 
 The reference's LanguageFilter scores docs with the fastText lid.176.bin
 model (src/datatrove/pipeline/filters/language_filter.py:11,49-62) inside a
 per-process singleton. fastText is not installable here, so the engine's
-*built-in* scorer is a deterministic function-word-profile classifier that
-runs entirely in whole-stage codegen; `fasttext_filter.py` provides the
+*built-in* scorer is a deterministic function-word-profile classifier run
+as one Arrow-batched pandas UDF over ``py_langid``; ``oracle_sql`` is the
+independent DuckDB rendering. `fasttext_filter.py` provides the
 model-backed pandas-UDF path when the library is present (same output
 schema, gated behind an import-try).
 
@@ -27,11 +28,10 @@ Semantics:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import LangIdConfig
-from datatrove_spark.functions import text as T
 
 NAME = "langid"
 
@@ -88,64 +88,13 @@ HAN_RE = "[一-鿿]"
 KANA_RE = "[ぁ-ゟ゠-ヿ]"
 HANGUL_RE = "[가-힣]"
 THAI_RE = "[ก-๛]"
-HAN_FRAC_THRESHOLD = 0.3
 SCRIPT_FRAC_THRESHOLD = 0.3
 
-
-def detect(text_col: Column, cfg: LangIdConfig = LangIdConfig()) -> Column:
-    """struct(language string, score double) — score rounded to 6dp.
-
-    NULL text coalesces to '' (NULL-as-empty-document, the engine-wide
-    contract): without it, size(NULL)=-1 under this session's legacy
-    sizeOfNull makes every profile score -1/-1 = 1.0 and NULL docs came out
-    'vi' — diverging from the DuckDB oracle's NULL propagation ('und')."""
-    text_col = F.coalesce(text_col, F.lit(""))
-    ws = T.words(F.lower(text_col))
-    n_words = F.size(ws)
-    pairs = F.array(
-        *[
-            F.struct(
-                (F.size(F.filter(ws, lambda w: w.isin(*prof))).cast("double") / n_words).alias("score"),
-                F.lit(lang).alias("language"),
-            )
-            for lang, prof in sorted(PROFILES.items())
-        ]
-    )
-    best = F.array_max(pairs)
-
-    def frac(pattern: str) -> Column:
-        return F.size(F.regexp_extract_all(text_col, F.lit(pattern), 0)).cast(
-            "double"
-        ) / F.length(text_col)
-
-    thai_f, hangul_f, kana_f, han_f = frac(THAI_RE), frac(HANGUL_RE), frac(KANA_RE), frac(HAN_RE)
-    t = SCRIPT_FRAC_THRESHOLD
-    score = (
-        F.when(thai_f > t, thai_f)
-        .when(hangul_f > t, hangul_f)
-        .when(kana_f > t, kana_f)
-        .when(han_f > t, han_f)
-        .otherwise(best["score"])
-    )
-    language = (
-        F.when(thai_f > t, "th")
-        .when(hangul_f > t, "ko")
-        .when(kana_f > t, "ja")
-        .when(han_f > t, "zh")
-        .when(best["score"] > 0, best["language"])
-        .otherwise("und")
-    )
-    return F.struct(language.alias("language"), F.round(score, 6).alias("language_score"))
-
-
-# ---- Arrow-batched hot path (kernel semantics == detect(), pinned by test) --
 
 _INVERTED: dict[str, tuple[str, ...]] = {}
 for _lang, _prof in sorted(PROFILES.items()):
     for _w in _prof:
         _INVERTED[_w] = _INVERTED.get(_w, ()) + (_lang,)
-
-_LANGS = sorted(PROFILES)
 
 
 import re as _re
@@ -159,10 +108,9 @@ _WS_RE = _re.compile(r"\S+")
 
 def py_langid(text: str | None) -> tuple[str, float | None]:
     """(language, UNROUNDED score) — one token pass over an inverted
-    word->languages index instead of 21 interpreted F.filter scans; the
-    equality test vs the declarative detect() is pinned in tests. Score
-    None mirrors the declarative form's NULL (no words / NULL / empty
-    text, where Spark's divisions return NULL)."""
+    word->languages index. NULL text is an empty document. Score None
+    mirrors the oracle's NULL (no words / NULL / empty text, where the SQL
+    divisions return NULL)."""
     if not text:
         return "und", None
     n_chars = len(text)
@@ -187,11 +135,13 @@ def py_langid(text: str | None) -> tuple[str, float | None]:
         for lg in inv.get(w, ()):
             counts[lg] = counts.get(lg, 0) + 1
     if not counts:
-        # all 21 scores are 0.0 -> best["score"] > 0 is false -> 'und', 0.0
+        # all 21 scores are 0.0 -> the oracle's best['score'] > 0 is false
+        # -> 'und', 0.0
         return "und", 0.0
     n = len(ws)
-    # max over (score, language) == array_max over the (score, language)
-    # structs: score first, then lexicographically largest language
+    # max over (score, language) == the oracle's list_max over the
+    # (score, language) structs: score first, then lexicographically
+    # largest language
     best = max((c / n, lg) for lg, c in counts.items())
     return best[1], best[0]
 
@@ -211,25 +161,12 @@ def _kernel_udf():
 
 
 def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
-    """Hot path: Arrow-batched py_langid kernel (rounding applied Spark-side
-    so it is bit-identical to the declarative/oracle rendering); the
-    declarative ``detect`` stays as documentation + cross-check
-    (apply_native, pinned equal in tests)."""
+    """Arrow-batched py_langid kernel; the score is rounded to 6dp
+    Spark-side, as the oracle rounds it."""
     d = _kernel_udf()(F.col(text_col))
     df = df.withColumn("language", d["language"]).withColumn(
         "language_score", F.round(d["raw"], 6)
     )
-    keep = F.col("language").isin(*cfg.languages) & (F.col("language_score") >= cfg.threshold)
-    return df.withColumn(
-        f"{NAME}_reason", F.when(~keep, F.lit("lang_filter")).otherwise(F.lit(None).cast("string"))
-    ).withColumn(f"{NAME}_keep", keep)
-
-
-def apply_native(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
-    """Declarative whole-stage-codegen form (the original hot path; now the
-    cross-check twin of apply)."""
-    d = detect(F.col(text_col), cfg)
-    df = df.withColumn("language", d["language"]).withColumn("language_score", d["language_score"])
     keep = F.col("language").isin(*cfg.languages) & (F.col("language_score") >= cfg.threshold)
     return df.withColumn(
         f"{NAME}_reason", F.when(~keep, F.lit("lang_filter")).otherwise(F.lit(None).cast("string"))

@@ -9,12 +9,12 @@ anti-membership filter (:510-556).
 
 Spark collapses the sorted-file machinery into relational form:
 
-  signatures  one narrow projection: shingle-hash array materialized once,
-              then per (bucket b, perm k) minima folded into one 60-bit
-              bucket signature — all integer math in whole-stage codegen;
-              emitted exploded as (doc_id, bucket_id, sig). Docs with fewer
-              than n_grams words have no shingles and emit no rows (the
-              reference likewise cannot dedup an empty signature).
+  signatures  one narrow Arrow-batched numpy kernel (py_bucket_sigs):
+              distinct shingle hashes, per (bucket b, perm k) minima folded
+              into one 60-bit bucket signature; emitted exploded as
+              (doc_id, bucket_id, sig). Docs with fewer than n_grams words
+              have no shingles and emit no rows (the reference likewise
+              cannot dedup an empty signature).
   pairs       min(id) OVER (PARTITION BY bucket_id, sig) -> (rep, id) star
               edges (a < b). ONE hash-partitioned shuffle of (16-byte key,
               id) rows replaces signature files + range-partitioned merges;
@@ -40,14 +40,12 @@ tests/test_registry_parity via the registry entry).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import MinHashConfig
-from datatrove_spark.functions import text as T
 from datatrove_spark.functions.hashing import (
     MERSENNE_31,
-    hash60,
     perm31_coeffs,
     py_hash60,
     sql_hash60,
@@ -57,92 +55,13 @@ from datatrove_spark.functions.hashing import (
 NAME = "minhash"
 
 
-def _shingle_hashes(text_col: Column, cfg: MinHashConfig) -> Column:
-    ws = T.words(T.simplify_text(text_col))
-    shingles = F.array_distinct(T.word_ngrams(ws, cfg.n_grams))
-    return F.transform(shingles, lambda s: hash60(s))
-
-
-def _bucket_sigs(hashes: Column, cfg: MinHashConfig) -> Column:
-    """array<struct(bucket_id, sig)> in ONE fold over the shingle hashes:
-    acc[k] = min over shingles of (h%M31 * a_k + b_k) % M31, then the
-    `finish` lambda folds each bucket's minima into a 60-bit signature.
-
-    31-bit universal-hash family — everything stays in int64 whole-stage
-    codegen long math (the reference ships 32-bit hash configs too,
-    tests/utils.py:9-31). The single-expression shape matters: naive
-    per-perm `array_min(transform(...))` columns each re-inline the whole
-    md5-shingle pipeline after CollapseProject, because fresh lambda
-    variable IDs defeat Catalyst's common-subexpression elimination —
-    measured 20 s vs 3 s on 5k docs. Inside aggregate(), `acc`/`mins` are
-    BOUND lambda variables, evaluated exactly once per row by construction.
-    """
-    n = cfg.num_buckets * cfg.hashes_per_bucket
-    coeffs = F.array(
-        *[
-            F.struct(F.lit(perm31_coeffs(k)[0]).alias("a"), F.lit(perm31_coeffs(k)[1]).alias("b"))
-            for k in range(n)
-        ]
-    )
-    init = F.array_repeat(F.lit(MERSENNE_31).cast("long"), n)
-
-    def finish(mins: Column) -> Column:
-        sigs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).alias("bucket_id"),
-                    hash60(
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(mins, b * cfg.hashes_per_bucket + i + 1).cast("string")
-                                for i in range(cfg.hashes_per_bucket)
-                            ],
-                        )
-                    ).alias("sig"),
-                )
-                for b in range(cfg.num_buckets)
-            ]
-        )
-        # permuted values are always < M31, so an untouched accumulator
-        # (still == M31) means the doc had no shingles -> no signatures.
-        # Checking here (mins is a bound variable) avoids a separate
-        # size(hs)>0 filter that would re-evaluate the shingle pipeline.
-        empty = F.array().cast("array<struct<bucket_id:int,sig:bigint>>")
-        return F.when(F.element_at(mins, 1) == MERSENNE_31, empty).otherwise(sigs)
-
-    return F.aggregate(
-        hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            coeffs,
-            lambda m, ab: F.least(m, (F.pmod(h, F.lit(MERSENNE_31)) * ab["a"] + ab["b"]) % MERSENNE_31),
-        ),
-        finish,
-    )
-
-
-def signatures_native(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", cfg: MinHashConfig = MinHashConfig()
-) -> DataFrame:
-    """Declarative-expression variant of ``signatures`` (same values).
-    Kept as executable documentation + parity cross-check: Spark's
-    higher-order functions are CodegenFallback (interpreted, per-element
-    object churn), measured ~6x slower than the numpy kernel below."""
-    d = df.select(id_col, _bucket_sigs(_shingle_hashes(F.col(text_col), cfg), cfg).alias("bss"))
-    return d.select(id_col, F.explode("bss").alias("bs")).select(
-        id_col, F.col("bs.bucket_id").alias("bucket_id"), F.col("bs.sig").alias("sig")
-    )
-
-
 _AB_CACHE: dict[int, "object"] = {}
 
 
 def py_shingle_hashes(text: str, cfg: MinHashConfig = MinHashConfig()) -> list[int]:
     """Per-doc kernel: h60 of each distinct n-gram shingle, first-occurrence
-    order — same values as the declarative `_shingle_hashes` expression.
-    NULL/short text -> [] (the SQL oracle's NULL propagation)."""
+    order — same values as the SQL oracle's shingle hashes. NULL/short
+    text -> [] (the SQL oracle's NULL propagation)."""
     text = text or ""
     from datatrove_spark.reference_impl.filters import simplify_text
 
@@ -155,9 +74,11 @@ def py_shingle_hashes(text: str, cfg: MinHashConfig = MinHashConfig()) -> list[i
 
 
 def py_bucket_sigs(text: str, cfg: MinHashConfig = MinHashConfig()) -> list[tuple[int, int]]:
-    """Pure-Python/numpy per-doc kernel — identical values to the
-    expression path (shared h60/perm31 definitions). NULL text -> no
-    shingles -> no signature rows (= the SQL oracle's NULL propagation)."""
+    """Pure-Python/numpy per-doc kernel — identical values to the SQL
+    oracle (shared h60/perm31 definitions). NULL text -> no shingles -> no
+    signature rows (= the SQL oracle's NULL propagation). 31-bit universal
+    hashes keep every product exact in int64 (the reference ships 32-bit
+    hash configs too, tests/utils.py:9-31)."""
     import numpy as np
 
     hs_list = py_shingle_hashes(text, cfg)

@@ -1,21 +1,12 @@
 """Fused quality battery — the measured hot path for the full pipeline.
 
-The per-stage operators (gopher_repetition/gopher_quality/c4_quality/
-fineweb_quality) are declarative column expressions, which is ideal for
-single-stage use and SQL-oracle parity. Composing all four into one plan,
-however, defeats Catalyst's subexpression elimination: higher-order-function
-lambdas get fresh variable IDs per call, so the shared word/line/sentence
-arrays are re-evaluated per stage (measured 24 s / 10k docs on local[32]
-vs 11 s for the stages run separately).
-
-This operator runs the whole battery in ONE Arrow-batched pandas UDF whose
-per-doc kernels are the engine's pure-Python reference implementations —
-tokenize once, short-circuit in stage order, rewrite once. Measured 3.5 s /
-10k docs (≈7x the composed plan) with bit-identical keep decisions. At
-100 TB both shapes are embarrassingly parallel single-pass scans; the fused
-kernel simply spends ~7x less CPU per row, and Arrow batching keeps the
-Python boundary amortized (input_hint: no per-row Python — this is
-per-BATCH Python with vectorized transport).
+Runs the whole battery (gopher_repetition -> gopher_quality -> c4_quality ->
+fineweb_quality) in ONE Arrow-batched pandas UDF over the engine's
+pure-Python kernels (reference_impl.filters) — the same kernels the
+single-stage operators run, so each document crosses the JVM/Python
+boundary once instead of once per stage: tokenize once, short-circuit in
+stage order, rewrite once. Arrow batching keeps the Python boundary
+amortized (per-BATCH Python with vectorized transport, not per-row).
 
 Short-circuit semantics (matches reference pipeline order, base_filter
 short-circuiting):
@@ -23,7 +14,7 @@ short-circuiting):
                   gopher_repetition -> gopher_quality -> c4 -> fineweb
     final_text  = c4-rewritten text iff gopher stages passed (c4 only runs
                   then); original text otherwise
-    fineweb runs on the c4-rewritten text (as in the composed plan).
+    fineweb runs on the c4-rewritten text (the reference mutates doc.text).
 """
 
 from __future__ import annotations

@@ -17,11 +17,12 @@ deterministic global ordering SURVEY.md §7.3.3 requires — not on file
 arrival order like the reference.
 
 Engine text semantics: sentences are the portable splitter's raw matches
-(functions/text.py sentences); span key = h60(simplify_text(3 consecutive
-raw sentences)); rewritten text = concatenation (no separator) of kept raw
-sentence matches, which preserves original inter-sentence spacing. A doc is
-dropped when fewer than cfg.min_sentences sentences or cfg.min_words words
-survive (sentence_dedup.py:322-444 semantics).
+(reference_impl.filters.sentences); span key = h60(simplify_text(3
+consecutive raw sentences)); rewritten text = concatenation (no separator)
+of kept raw sentence matches, which preserves original inter-sentence
+spacing. NULL text is an empty document. A doc is dropped when fewer than
+cfg.min_sentences sentences or cfg.min_words words survive
+(sentence_dedup.py:322-444 semantics).
 """
 
 from __future__ import annotations
@@ -32,7 +33,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from datatrove_spark.functions import text as T
 from datatrove_spark.functions.hashing import sql_hash60
 
 NAME = "sentence_dedup"
@@ -48,8 +48,7 @@ class SentenceDedupConfig:
 def py_span_hashes(text: str, n: int) -> list[int]:
     """Per-doc kernel: h60 of the simplified text of each n-sentence window
     (index = first sentence position). Shares the sentence/simplify/h60
-    definitions with the SQL oracle and the declarative path it replaces
-    (lambda higher-order expressions run interpreted — measured ~3x slower)."""
+    definitions with the SQL oracle."""
     from datatrove_spark.functions.hashing import py_hash60
     from datatrove_spark.reference_impl.filters import sentences, simplify_text
 
@@ -79,17 +78,14 @@ def _spans(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
 
 def py_remove_spans(
     text: str | None, remove_idx, cfg: SentenceDedupConfig
-) -> tuple[str | None, bool | None]:
-    """Per-doc rewrite kernel (matches _remove_spans_native's expression
-    semantics value-for-value, NULL included): drop flagged sentences,
-    rebuild text, recount from the rebuilt text."""
+) -> tuple[str, bool]:
+    """Per-doc rewrite kernel (the oracle's semantics value-for-value):
+    drop flagged sentences, rebuild text, recount from the rebuilt text.
+    NULL text is an empty document: ('', False)."""
     from datatrove_spark.reference_impl.filters import sentences, words
 
     if text is None:
-        # match the declarative NULL semantics under this session's legacy
-        # (non-ANSI) config: array_join(NULL) -> NULL text, but
-        # size(NULL) = -1 -> (-1 >= min) -> keep FALSE, not NULL
-        return None, False
+        return "", False
     rem = set(remove_idx) if remove_idx is not None else ()
     ss = sentences(text)
     kept = [s for i, s in enumerate(ss) if i not in rem]
@@ -109,12 +105,9 @@ def _remove_spans(
 ) -> DataFrame:
     """Shared filter stage: drop the flagged span occurrences' sentences,
     rebuild text, keep docs with enough surviving sentences/words — one
-    Arrow kernel pass per doc. The declarative rendering
-    (_remove_spans_native) is retained as executable documentation: its
-    rewrite expression is cloned three times per row by CollapseProject
-    (text, sentence recount, word recount) and each clone splits sentences
-    with the backtracking regex — O(n^2) per doc on terminator-free text
-    (measured 36 s vs 4 s over 500k unpunctuated docs, BENCH.md round 4)."""
+    Arrow kernel pass per doc. Its sentence splitter is a linear scan; the
+    regex form backtracks O(n^2) per doc on terminator-free text (measured
+    36 s vs 4 s over 500k unpunctuated docs, BENCH.md round 4)."""
     covered = _covered(dup_spans, id_col, cfg.span)
     out = df.join(covered, id_col, "left")
 
@@ -141,32 +134,6 @@ def _covered(dup_spans: DataFrame, id_col: str, n: int) -> DataFrame:
         )
         .groupBy(id_col)
         .agg(F.collect_set("ri").alias("remove_idx"))
-    )
-
-
-def _remove_spans_native(
-    df: DataFrame, dup_spans: DataFrame, id_col: str, text_col: str, cfg: SentenceDedupConfig
-) -> DataFrame:
-    """Declarative-expression rendering of _remove_spans (same values) —
-    executable documentation / cross-check only; see _remove_spans for why
-    the Arrow kernel is the hot path."""
-    covered = _covered(dup_spans, id_col, cfg.span)
-    out = df.join(covered, id_col, "left").withColumn(
-        "remove_idx", F.coalesce(F.col("remove_idx"), F.array().cast("array<int>"))
-    )
-    sents = T.sentences(F.col(text_col))
-    kept_sents = F.filter(
-        F.transform(sents, lambda s, i: F.struct(s.alias("s"), i.alias("i"))),
-        lambda st: ~F.array_contains(F.col("remove_idx"), st["i"]),
-    )
-    new_text = F.array_join(F.transform(kept_sents, lambda st: st["s"]), "")
-    n_kept = F.size(T.sentences(new_text))
-    n_words = F.size(T.words(new_text))
-    keep = (n_kept >= cfg.min_sentences) & (n_words >= cfg.min_words)
-    return (
-        out.withColumn(f"{NAME}_text", new_text)
-        .withColumn(f"{NAME}_keep", keep)
-        .drop("remove_idx")
     )
 
 

@@ -14,21 +14,20 @@ order-free):
   verified pair: popcount(fp_a XOR fp_b) <= max_hamming (default 3)
   dedup: connected components over verified pairs, keep component min.
 
+Fingerprints come from one Arrow-batched numpy kernel (py_fingerprint).
 Shuffle shape matches minhash: explode 4 (band, value) rows per doc ->
 one hash-partitioned groupBy; fingerprints are single longs so the
-verification join is trivially narrow. All integer math, whole-stage
-codegen, no Python.
+verification join is trivially narrow.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import SimHashConfig
-from datatrove_spark.functions import text as T
-from datatrove_spark.functions.hashing import hash60, sql_hash60
+from datatrove_spark.functions.hashing import sql_hash60
 from datatrove_spark.operators.minhash import connected_components
 
 NAME = "simhash"
@@ -38,7 +37,7 @@ _H60_WORD_CACHE: dict[str, int] = {}
 
 
 def py_fingerprint(text: str, cfg: SimHashConfig = SimHashConfig()) -> int | None:
-    """numpy per-doc kernel — identical values to the expression path.
+    """numpy per-doc kernel — identical values to the SQL oracle.
     NULL text -> None fingerprint (= the SQL oracle's NULL propagation)."""
     text = text or ""
     import numpy as np
@@ -64,33 +63,6 @@ def py_fingerprint(text: str, cfg: SimHashConfig = SimHashConfig()) -> int | Non
     set_counts = ((hs[:, None] >> np.arange(cfg.bits)) & 1).sum(axis=0)
     bits = (set_counts * 2 > len(ws)).astype(np.int64)
     return int((bits << np.arange(cfg.bits)).sum())
-
-
-def fingerprint(text_col: Column, cfg: SimHashConfig = SimHashConfig()) -> Column:
-    ws = F.array_distinct(T.words(T.simplify_text(text_col)))
-    hs = F.transform(ws, lambda w: hash60(w))
-    n = F.size(hs)
-    bits = [
-        F.when(
-            F.size(F.filter(hs, lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1)) * 2 > n,
-            F.lit(1 << b).cast("long"),
-        ).otherwise(F.lit(0).cast("long"))
-        for b in range(cfg.bits)
-    ]
-    fp = bits[0]
-    for b in bits[1:]:
-        fp = fp + b
-    return F.when(n > 0, fp)
-
-
-def fingerprints_native(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-                        cfg: SimHashConfig = SimHashConfig()) -> DataFrame:
-    """Declarative-expression variant (same values) — kept as executable
-    documentation; the 60 per-bit higher-order filters are interpreted
-    (CodegenFallback) and measured far slower than the numpy kernel."""
-    return df.select(id_col, fingerprint(F.col(text_col), cfg).alias("fp")).filter(
-        F.col("fp").isNotNull()
-    )
 
 
 def fingerprints(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",

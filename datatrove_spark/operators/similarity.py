@@ -29,7 +29,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from datatrove_spark.functions.hashing import py_hash60
-from datatrove_spark.functions.vectors import cosine, dot, shuffle_vec, to_double_array
+from datatrove_spark.functions.vectors import cosine, shuffle_vec, to_double_array
 
 NAME = "similarity"
 
@@ -70,25 +70,15 @@ def plane_coeff(table: int, plane: int, j: int) -> float:
     return (py_hash60(f"plane_{table}_{plane}_{j}") % 2001 - 1000) / 1000.0
 
 
-def _bucket_code(vec: Column, table: int, n_planes: int, dim: int) -> Column:
-    code = F.lit(0).cast("long")
-    v = to_double_array(vec)
-    for p in range(n_planes):
-        coeffs = F.array(*[F.lit(plane_coeff(table, p, j)) for j in range(dim)])
-        d = dot(v, coeffs)
-        code = code + F.when(d > 0, F.lit(1 << p).cast("long")).otherwise(F.lit(0).cast("long"))
-    return code
-
-
 _PLANE_CACHE: dict[tuple, "object"] = {}
 
 
 def py_bucket_codes(mat, n_tables: int, n_planes: int, dim: int):
     """(B, dim) float64 batch -> (B, n_tables) int64 bucket codes.
 
-    Bit-identical to _bucket_code / the SQL oracle: the plane dot product
+    Bit-identical to the SQL oracle (sql_bucket_code): the plane dot product
     accumulates column-by-column (acc += v[:,j]*c_j), which reproduces the
-    strict left-to-right float64 fold of F.aggregate / DuckDB list_sum for
+    strict left-to-right float64 fold of DuckDB list_sum for
     every row at once — vectorized across the batch, sequential across dims."""
     import numpy as np
 
@@ -123,8 +113,8 @@ def lsh_buckets(
     dim: int = 64,
 ) -> DataFrame:
     """(id, table_id, bucket): the write-side corpus index. Arrow-batched
-    numpy kernel (the declarative _bucket_code path runs its 32 plane dots
-    as interpreted lambda folds — measured ~15x slower on real batches)."""
+    numpy kernel (a Column rendering runs its 32 plane dots as interpreted
+    lambda folds — measured ~15x slower on real batches)."""
     from pyspark.sql.types import ArrayType, LongType
 
     @F.pandas_udf(ArrayType(LongType()))
@@ -331,7 +321,7 @@ def _block_pair_kernel(threshold: float, forest: bool = False):
     """mapInPandas generator over (items_l, items_r, same) grid rows: each row
     carries two packed blocks of (vid, vec) structs; the kernel emits every
     (a, b) pair with cosine >= threshold as one numpy score matrix per row.
-    Float parity with the row-wise HOF form / SQL oracle: dots and norms
+    Float parity with the SQL oracle and the Column-side _cos: dots and norms
     accumulate dimension-by-dimension (columnwise outer-product adds), which
     reproduces the strict left-to-right float64 fold per element. Shared by
     neardup_pairs (global grid) and cell_neardup_edges (per-cell grid).
@@ -420,8 +410,7 @@ def cell_neardup_edges(
     block-matrix product: vectors pack into (cell, blk) chunks, the grid
     self-joins on cell equality (blk_l <= blk_r upper triangle), and each
     grid row computes one numpy score matrix — the same Arrow kernel as
-    neardup_pairs, restricted to within-cell pairs. The interpreted-HOF
-    rendering of the same edges is semdedup_edges_rowwise (cross-check only).
+    neardup_pairs, restricted to within-cell pairs.
 
     Scale: the only shuffle is the (cell, blk) pack; a hot cell's quadratic
     work splits across n_blocks*(n_blocks+1)/2 independent grid rows, so one
@@ -466,30 +455,6 @@ def cell_neardup_edges(
     return grid.mapInPandas(_block_pair_kernel(threshold, forest=forest), "a long, b long")
 
 
-def semdedup_edges_rowwise(
-    cells_df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> DataFrame:
-    """Row-level within-cell self-join rendering (executable documentation /
-    cross-check of cell_neardup_edges): interpreted HOF cosine per pair —
-    the construct the block kernel replaces on semdedup's dominant term."""
-    left = cells_df.select(
-        F.col(cell_col).alias("__cell"), F.col(id_col).alias("a"), F.col(vec_col).alias("__va")
-    )
-    right = cells_df.select(
-        F.col(cell_col).alias("__cell"), F.col(id_col).alias("b"), F.col(vec_col).alias("__vb")
-    )
-    return (
-        left.join(right, "__cell")
-        .filter(F.col("a") < F.col("b"))
-        .filter(_cos(F.col("__va"), F.col("__vb")) >= threshold)
-        .select("a", "b")
-    )
-
-
 def semdedup(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -511,8 +476,7 @@ def semdedup(
     `centroids` argument without touching the plan); the within-cell pairwise
     cosine runs as the block-matrix Arrow kernel (cell_neardup_edges): vectors
     pack once by (cell, blk) and each grid row computes a numpy score matrix —
-    never the interpreted per-pair HOF fold (that rendering survives as
-    semdedup_edges_rowwise, cross-check only). The clustering exists precisely
+    never an interpreted per-pair HOF fold. The clustering exists precisely
     to bound the quadratic pair work to (n/k)^2 per cell, which is the paper's
     own design (they run exhaustive cosine inside k-means clusters); at 10^9
     vectors the corpus shuffles once by cell and no cross-cell pair is ever
@@ -593,25 +557,6 @@ FROM {table} t LEFT JOIN rep ON t.{id_col} = rep.node
 """.strip()
 
 
-def neardup_pairs_rowwise(
-    df: DataFrame,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Row-level self-join rendering (executable documentation / cross-check
-    of neardup_pairs): interpreted HOF cosine per pair — measured far slower
-    than the block-matrix kernel, identical output."""
-    left = df.select(F.col(id_col).alias("a"), F.col(vec_col).alias("__va"))
-    right = df.select(F.col(id_col).alias("b"), F.col(vec_col).alias("__vb"))
-    joined = left.join(right, F.col("a") < F.col("b"))
-    return (
-        joined.withColumn("score", _cos(F.col("__va"), F.col("__vb")))
-        .filter(F.col("score") >= threshold)
-        .select("a", "b")
-    )
-
-
 def neardup_pairs(
     df: DataFrame,
     threshold: float = 0.95,
@@ -622,7 +567,7 @@ def neardup_pairs(
     """Exact all-pairs cosine >= threshold as a BLOCK-MATRIX product: vectors
     group into n_blocks chunks, the (upper-triangular) chunk-pair grid joins
     as n_blocks^2/2 rows, and each grid cell computes a numpy score matrix in
-    one applyInPandas call. Float parity with the row-wise form / SQL oracle:
+    one applyInPandas call. Float parity with the SQL oracle:
     dots accumulate dimension-by-dimension (64 outer-product adds), which
     reproduces the strict left-to-right float64 fold per element.
 

@@ -8,9 +8,9 @@ the fingerprint SET is a position-carrying sketch that (a) guarantees any
 shared run of >= w + k - 1 tokens is detected (no probabilistic recall like
 minhash bands), and (b) is ~2/(w+1) the size of the gram stream, tunable.
 
-Semantics, identical across Spark / Python kernel / DuckDB oracle:
-- canonical text = the dedup simplify form (functions/text.py:64), tokens =
-  whitespace split;
+Semantics, identical across the Spark kernel and the DuckDB oracle:
+- canonical text = the dedup simplify form
+  (reference_impl.filters.simplify_text), tokens = whitespace split;
 - gram p (1-based) = tokens[p..p+k-1] joined by ' ', hashed with the
   portable h60 (functions/hashing.py — a Rabin-Karp rolling hash would be
   the classic single-node micro-optimization, but only a cross-engine hash
@@ -32,20 +32,18 @@ count. A fp shared by d <= max_df docs yields at most d^2 pairs.
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from datatrove_spark.config import WinnowingConfig
-from datatrove_spark.functions import text as T
-from datatrove_spark.functions.hashing import hash60, py_hash60, sql_hash60
+from datatrove_spark.functions.hashing import py_hash60, sql_hash60
 
 NAME = "winnowing"
 
 
 def py_winnow_fps(text: str | None, cfg: WinnowingConfig = WinnowingConfig()) -> list[dict]:
     """Per-doc kernel: sorted-by-position distinct (pos, fp) selections.
-    Same values as the declarative path and the SQL oracle."""
+    Same values as the SQL oracle."""
     import numpy as np
 
     from datatrove_spark.reference_impl.filters import simplify_text
@@ -87,32 +85,6 @@ def fingerprints(
     return df.select(F.col(id_col), F.explode(kern(F.col(text_col))).alias("pf")).select(
         id_col, F.col("pf.pos").alias("pos"), F.col("pf.fp").alias("fp")
     )
-
-
-def fingerprints_native(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cfg: WinnowingConfig = WinnowingConfig(),
-) -> DataFrame:
-    """Declarative cross-check (same values): posexplode the gram hashes,
-    sliding min via a rows-frame window. Kept as executable documentation —
-    it costs a doc_id shuffle the kernel path avoids, and the gram pipeline
-    runs interpreted (HOF); use `fingerprints` in production."""
-    ws = T.words(T.simplify_text(F.col(text_col)))
-    grams = T.word_ngrams(ws, cfg.k)
-    hs = F.transform(grams, lambda g: hash60(g))
-    d = df.select(F.col(id_col), F.posexplode(hs).alias("p0", "h"))
-    frame = Window.partitionBy(id_col).orderBy("p0").rowsBetween(Window.currentRow, cfg.w - 1)
-    # min over struct(h, -pos): smallest hash, ties -> largest position
-    sel = F.min(F.struct(F.col("h"), (-F.col("p0")).alias("np"))).over(frame)
-    cnt = F.count("*").over(frame)
-    wins = d.select(id_col, sel.alias("s"), cnt.alias("c")).filter(F.col("c") == cfg.w)
-    return wins.select(
-        F.col(id_col),
-        (-F.col("s.np") + 1).cast("long").alias("pos"),
-        F.col("s.h").alias("fp"),
-    ).distinct()
 
 
 def pairs(

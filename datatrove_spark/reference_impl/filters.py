@@ -4,11 +4,13 @@ These functions re-derive the *decision rules* of the reference filters
 (datatrove, see per-function provenance) under this engine's portable text
 semantics (config.py TOKENIZER NOTE). They serve double duty:
 
-1. pytest parity oracle — the Spark operators and the DuckDB oracle SQL
-   must agree with these functions exactly, row for row;
-2. executor-side kernels for the Arrow-batched UDF paths
-   (operators/gopher_repetition.py, operators/quality_fused.py) — one
-   Python implementation, three mutually-checking execution forms.
+1. executor-side kernels for the Arrow-batched UDF paths
+   (operators/gopher_repetition.py, gopher_quality.py, c4_quality.py,
+   fineweb_quality.py, quality_fused.py) — one Python implementation per
+   filter;
+2. the driver-side reference those operators are checked with: each
+   operator's DuckDB oracle SQL must agree with them row for row, and
+   tests/test_reference_f1.py checks them against the real reference.
 """
 
 from __future__ import annotations

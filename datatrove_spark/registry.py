@@ -107,28 +107,9 @@ def _q_fineweb_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def quality_pipeline(df: DataFrame, text_col: str = "text") -> DataFrame:
     """FineWeb-order heuristic battery — fused Arrow-kernel hot path
-    (operators/quality_fused.py; ~7x the composed-native plan). Returns the
-    input plus drop_reason / final_text / keep."""
+    (operators/quality_fused.py). Returns the input plus drop_reason /
+    final_text / keep."""
     return quality_fused.apply(df, text_col)
-
-
-def quality_pipeline_native(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The same battery as a composed declarative plan (per-stage reason
-    columns retained): gopher_repetition -> gopher_quality -> c4 (with
-    rewrite) -> fineweb; `text` holds the C4 rewritten text."""
-    df = gopher_repetition.apply(df, text_col)
-    df = gopher_quality.apply(df, text_col)
-    df = c4_quality.apply(df, text_col)
-    # downstream stages see the C4-rewritten text (reference mutates doc.text)
-    df = df.withColumn(text_col, F.col(f"{c4_quality.NAME}_text"))
-    df = fineweb_quality.apply(df, text_col)
-    reason = F.coalesce(
-        F.col("gopher_repetition_reason"),
-        F.col("gopher_quality_reason"),
-        F.col("c4_quality_reason"),
-        F.col("fineweb_quality_reason"),
-    )
-    return df.withColumn("drop_reason", reason).withColumn("keep", reason.isNull())
 
 
 def _q_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,25 +117,14 @@ def _q_quality_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "keep", "drop_reason", "final_text")
 
 
-def _q_quality_pipeline_native(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = quality_pipeline_native(load(spark, sf_dir, "documents"))
-    return df.select("doc_id", "keep", "drop_reason", F.col("text").alias("final_text"))
-
-
-def _oracle_quality_pipeline(fused: bool) -> str:
-    # chain the per-operator oracles through CTEs; c4 rewrite feeds fineweb
+def _oracle_quality_pipeline() -> str:
+    # chain the per-operator oracles through CTEs; c4 rewrite feeds fineweb.
+    # The battery short-circuits: c4's rewrite only happens when the gopher
+    # stages passed.
     gq = gopher_quality.oracle_sql()
     gr = gopher_repetition.oracle_sql()
     c4 = c4_quality.oracle_sql()
     fw = fineweb_quality.oracle_sql(table="c4_rewritten", text_col="text")
-    # fused path short-circuits: c4's rewrite only happens when the gopher
-    # stages passed; the composed-native plan rewrites unconditionally.
-    final_text = (
-        """CASE WHEN gr.gopher_repetition_reason IS NULL AND gq.gopher_quality_reason IS NULL
-        THEN c4.c4_quality_text ELSE d.text END"""
-        if fused
-        else "c4.c4_quality_text"
-    )
     return f"""
 WITH gq AS ({gq}), gr AS ({gr}), c4 AS ({c4}),
 c4_rewritten AS (
@@ -166,7 +136,8 @@ SELECT d.doc_id,
            c4.c4_quality_reason, fw.fineweb_quality_reason) AS drop_reason,
   (coalesce(gr.gopher_repetition_reason, gq.gopher_quality_reason,
             c4.c4_quality_reason, fw.fineweb_quality_reason) IS NULL) AS keep,
-  {final_text} AS final_text
+  CASE WHEN gr.gopher_repetition_reason IS NULL AND gq.gopher_quality_reason IS NULL
+       THEN c4.c4_quality_text ELSE d.text END AS final_text
 FROM documents d
 JOIN gq USING (doc_id) JOIN gr USING (doc_id)
 JOIN c4 USING (doc_id) JOIN fw USING (doc_id)
@@ -180,13 +151,13 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep decision, and the curated (C4-rewritten + PII-scrubbed) text for
     kept documents.
 
-    The production path (plans/pipeline.py) short-circuits — dropped docs
-    never reach later stages. Because every stage is a pure per-document
-    function of its input text, running all stages and coalescing reasons in
-    stage order yields the identical keep/reason/text, which is what lets
-    this compose as one declarative plan the oracle can mirror. Reference
-    stage order: /root/reference/examples/fineweb.py (url filter -> langid
-    -> gopher rep -> gopher qual -> c4 -> fineweb -> PII formatter)."""
+    Every stage runs on every document and the reasons coalesce in stage
+    order — the same shape as plans/pipeline.compose, which the production
+    run_pipeline uses. Because every stage is a pure per-document function
+    of its input text, this yields the keep/reason/text a short-circuiting
+    run would, and the oracle mirrors it as one query. Stage order follows
+    the reference's examples/fineweb.py (url filter -> langid -> gopher rep
+    -> gopher qual -> c4 -> fineweb -> PII formatter)."""
     df = load(spark, sf_dir, "documents").withColumn(
         "url",
         F.concat(
@@ -225,7 +196,7 @@ _CUR_URL_SQL = (
 def _oracle_curation_pipeline() -> str:
     uf = url_filter.oracle_sql("u", "url", cfg=_URLF_CFG)
     li = langid.oracle_sql()
-    qp = _oracle_quality_pipeline(fused=True)
+    qp = _oracle_quality_pipeline()
     pi = pii.oracle_sql(table="qp_text", text_expr="text")
     reason = (
         "coalesce(uf.url_filter_reason, "
@@ -815,8 +786,7 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "c4_paragraphs": (_q_c4_paragraphs, c4_paragraphs.oracle_sql()),
     "toxicity_scrub": (_q_toxicity_scrub, _oracle_toxicity_scrub()),
     "fineweb_quality": (_q_fineweb_quality, fineweb_quality.oracle_sql()),
-    "quality_pipeline": (_q_quality_pipeline, _oracle_quality_pipeline(fused=True)),
-    "quality_pipeline_native": (_q_quality_pipeline_native, _oracle_quality_pipeline(fused=False)),
+    "quality_pipeline": (_q_quality_pipeline, _oracle_quality_pipeline()),
     "curation_pipeline": (_q_curation_pipeline, _oracle_curation_pipeline()),
     "langid": (_q_langid, langid.oracle_sql()),
     "fasttext_filter": (_q_fasttext_filter, _oracle_fasttext_filter()),

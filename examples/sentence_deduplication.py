@@ -34,8 +34,13 @@ def run(spark: SparkSession, input_path: str | None, out_dir: str, n_generate: i
         # the testdata `documents` table's text carries no punctuation
         from datatrove_spark.sources.pages import generate_pages
 
-        docs = generate_pages(spark, n_generate).withColumn(
-            "doc_id", F.monotonically_increasing_id()
+        # materialized: Spark 4.1 pushes the gopher_quality_keep filter below
+        # the pandas UDF into the generator's lambda expressions, where the
+        # UDF cannot be evaluated (pages read from storage are unaffected)
+        docs = (
+            generate_pages(spark, n_generate)
+            .withColumn("doc_id", F.monotonically_increasing_id())
+            .localCheckpoint(eager=True)
         )
     else:
         docs = spark.read.parquet(input_path)

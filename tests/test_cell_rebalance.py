@@ -87,12 +87,19 @@ def test_trained_codebook_labels_are_centroid_ids(spark):
     labels = {r.vec_id: r.cell for r in out.collect()}
     assert set(labels.values()) <= set(sparse_ids)
     # the broadcast-join path carries the idx->id relabeling in the rates
-    # table instead of a plan literal — labels must be identical
-    joined = cell_rebalance.apply(
-        emb, n_centroids=8, centroids=cents, centroid_ids=sparse_ids,
-        max_literal_cells=0,
-    )
-    assert labels == {r.vec_id: r.cell for r in joined.collect()}
+    # table instead of a plan literal — rows must be identical, also when
+    # the codebook repeats a centroid id (both paths count per id)
+    dup_ids = [1000 + 7 * (i // 2) for i in range(len(cents))]
+
+    def rows(ids, max_literal_cells):
+        out = cell_rebalance.apply(
+            emb, n_centroids=8, centroids=cents, centroid_ids=ids,
+            max_literal_cells=max_literal_cells,
+        )
+        return {tuple(r) for r in out.collect()}
+
+    for ids in (sparse_ids, dup_ids):
+        assert rows(ids, len(ids)) == rows(ids, 0), ids
     default = {
         r.vec_id: r.cell for r in assign_cells(emb, cents).collect()
     }  # row-index labels

@@ -1,8 +1,10 @@
-"""Deterministic fuzz parity: Spark operators vs the pure-Python reference
-on a seeded corpus of adversarial documents (unicode mixtures, control
-chars, emoji, RTL, zero-width joiners, very long words, pathological
-whitespace). One DataFrame round-trip per operator, not per example —
-hypothesis-style coverage at Spark-friendly cost.
+"""Deterministic fuzz parity on a seeded corpus of adversarial documents
+(unicode mixtures, control chars, emoji, RTL, zero-width joiners, very long
+words, pathological whitespace). The single-stage quality operators run the
+pure-Python kernels in Spark and are checked against their DuckDB oracle;
+the rest are checked against the pure-Python reference. One DataFrame
+round-trip per operator, not per example — hypothesis-style coverage at
+Spark-friendly cost.
 
 What this guards: Java-regex vs Python-re vs RE2 dialect drift (SURVEY
 §7.3.4), float boundary flips in ratio thresholds (§7.3.7), and NULL/empty
@@ -15,7 +17,6 @@ import random
 import string
 
 import pytest
-from pyspark.sql import functions as F
 
 from datatrove_spark.operators import (
     c4_badwords,
@@ -26,6 +27,7 @@ from datatrove_spark.operators import (
     gopher_repetition,
 )
 from datatrove_spark.reference_impl import filters as ref
+from tests.conftest import assert_matches_oracle, duck_documents
 
 ALPHABETS = [
     string.ascii_letters + "     .,!?'\"\n",
@@ -80,15 +82,19 @@ def fuzz(spark):
     return docs, df
 
 
+@pytest.fixture(scope="module")
+def fuzz_oracle(spark):
+    """(Spark frame, DuckDB connection) over the fuzz docs + a NULL row."""
+    rows = list(enumerate(gen_docs() + [None]))
+    return spark.createDataFrame(rows, "doc_id long, text string"), duck_documents(rows)
+
+
 def _col(df, *cols):
     return {r[0]: tuple(r[1:]) for r in df.select("doc_id", *cols).collect()}
 
 
-def test_fuzz_gopher_quality(fuzz):
-    docs, df = fuzz
-    got = _col(gopher_quality.apply(df), "gopher_quality_reason")
-    for i, t in enumerate(docs):
-        assert got[i][0] == ref.gopher_quality(t), f"doc {i}: {t[:80]!r}"
+def test_fuzz_gopher_quality(fuzz_oracle):
+    assert_matches_oracle(gopher_quality, *fuzz_oracle)
 
 
 def test_fuzz_gopher_repetition(fuzz):
@@ -98,18 +104,12 @@ def test_fuzz_gopher_repetition(fuzz):
         assert got[i][0] == ref.gopher_repetition(t), f"doc {i}: {t[:80]!r}"
 
 
-def test_fuzz_c4_quality(fuzz):
-    docs, df = fuzz
-    got = _col(c4_quality.apply(df), "c4_quality_reason", "c4_quality_text")
-    for i, t in enumerate(docs):
-        assert got[i] == ref.c4_quality(t), f"doc {i}: {t[:80]!r}"
+def test_fuzz_c4_quality(fuzz_oracle):
+    assert_matches_oracle(c4_quality, *fuzz_oracle)
 
 
-def test_fuzz_fineweb_quality(fuzz):
-    docs, df = fuzz
-    got = _col(fineweb_quality.apply(df), "fineweb_quality_reason")
-    for i, t in enumerate(docs):
-        assert got[i][0] == ref.fineweb_quality(t), f"doc {i}: {t[:80]!r}"
+def test_fuzz_fineweb_quality(fuzz_oracle):
+    assert_matches_oracle(fineweb_quality, *fuzz_oracle)
 
 
 def test_fuzz_c4_paragraphs(fuzz):

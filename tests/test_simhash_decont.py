@@ -28,12 +28,6 @@ def corpus(spark):
     return spark.createDataFrame(DOCS, "doc_id long, text string")
 
 
-def test_kernel_matches_native(spark, corpus):
-    a = sorted(tuple(r) for r in simhash.fingerprints(corpus).collect())
-    b = sorted(tuple(r) for r in simhash.fingerprints_native(corpus).collect())
-    assert a == b
-
-
 def test_fingerprints(spark, corpus):
     fps = {r.doc_id: r.fp for r in simhash.fingerprints(corpus).collect()}
     assert 4 not in fps

@@ -1,10 +1,9 @@
-"""Winnowing fingerprints: paper guarantees, kernel-vs-declarative parity,
-plan shape. Registry parity (test_registry_parity) covers the DuckDB oracle
-byte-match; these pin what the oracle can't express."""
+"""Winnowing fingerprints: paper guarantees and plan shape. Registry parity
+(test_registry_parity) covers the DuckDB oracle byte-match; these pin what
+the oracle can't express."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from datatrove_spark.config import WinnowingConfig
@@ -15,15 +14,6 @@ from tests.conftest import SF_SMALL
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-
-
-def test_kernel_matches_declarative(spark, docs):
-    """The Arrow kernel and the posexplode+window plan must select identical
-    (doc, pos, fp) sets — two independent renderings of the paper."""
-    sample = docs.filter("doc_id < 60")
-    a = sorted(map(tuple, winnowing.fingerprints(sample).collect()))
-    b = sorted(map(tuple, winnowing.fingerprints_native(sample).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_density_and_coverage(docs):
