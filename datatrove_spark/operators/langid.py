@@ -28,7 +28,7 @@ Semantics:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import LangIdConfig
@@ -160,17 +160,23 @@ def _kernel_udf():
     return _detect_batch
 
 
-def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
-    """Arrow-batched py_langid kernel; the score is rounded to 6dp
-    Spark-side, as the oracle rounds it."""
-    d = _kernel_udf()(F.col(text_col))
-    df = df.withColumn("language", d["language"]).withColumn(
-        "language_score", F.round(d["raw"], 6)
-    )
+def with_language(
+    df: DataFrame, language: Column, raw: Column, cfg: LangIdConfig = LangIdConfig()
+) -> DataFrame:
+    """Append ``language``, ``language_score`` (the raw score rounded to 6dp,
+    as the oracle rounds it), ``langid_reason`` and ``langid_keep`` from a
+    py_langid result's two columns."""
+    df = df.withColumn("language", language).withColumn("language_score", F.round(raw, 6))
     keep = F.col("language").isin(*cfg.languages) & (F.col("language_score") >= cfg.threshold)
     return df.withColumn(
         f"{NAME}_reason", F.when(~keep, F.lit("lang_filter")).otherwise(F.lit(None).cast("string"))
     ).withColumn(f"{NAME}_keep", keep)
+
+
+def apply(df: DataFrame, text_col: str = "text", cfg: LangIdConfig = LangIdConfig()) -> DataFrame:
+    """Arrow-batched py_langid kernel, then ``with_language``."""
+    d = _kernel_udf()(F.col(text_col))
+    return with_language(df, d["language"], d["raw"], cfg)
 
 
 def oracle_sql(

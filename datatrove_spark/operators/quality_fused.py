@@ -1,12 +1,19 @@
 """Fused quality battery — the measured hot path for the full pipeline.
 
-Runs the whole battery (gopher_repetition -> gopher_quality -> c4_quality ->
-fineweb_quality) in ONE Arrow-batched pandas UDF over the engine's
-pure-Python kernels (reference_impl.filters) — the same kernels the
-single-stage operators run, so each document crosses the JVM/Python
-boundary once instead of once per stage: tokenize once, short-circuit in
-stage order, rewrite once. Arrow batching keeps the Python boundary
-amortized (per-BATCH Python with vectorized transport, not per-row).
+``battery`` is the per-document body: gopher_repetition -> gopher_quality ->
+c4_quality -> fineweb_quality over the engine's pure-Python kernels
+(reference_impl.filters), the same kernels the single-stage operators run —
+tokenize once, short-circuit in stage order, rewrite once. Two Arrow-batched
+pandas UDFs call it, so each document crosses the JVM/Python boundary once
+instead of once per stage:
+
+- ``make_udf``/``apply`` here: the battery alone (the ``quality_pipeline``
+  registry row, bench.py's headline, the traced benchmark layer);
+- ``plans/pipeline.canonical_stages``: langid, then the battery, then the
+  PII scrub of its text, in one UDF for the whole curation flow.
+
+Arrow batching keeps the Python boundary amortized (per-BATCH Python with
+vectorized transport, not per-row).
 
 Short-circuit semantics (matches reference pipeline order, base_filter
 short-circuiting):
@@ -24,13 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from datatrove_spark.config import (
-    C4QualityConfig,
-    EngineConfig,
-    FineWebQualityConfig,
-    GopherQualityConfig,
-    GopherRepetitionConfig,
-)
+from datatrove_spark.config import EngineConfig
+from datatrove_spark.reference_impl import filters as rf
 
 NAME = "quality_fused"
 
@@ -39,27 +41,28 @@ RESULT_SCHEMA = StructType(
 )
 
 
-def make_udf(cfg: EngineConfig = EngineConfig()):
-    rep_cfg: GopherRepetitionConfig = cfg.gopher_repetition
-    gq_cfg: GopherQualityConfig = cfg.gopher_quality
-    c4_cfg: C4QualityConfig = cfg.c4
-    fw_cfg: FineWebQualityConfig = cfg.fineweb
+def battery(text: str | None, cfg: EngineConfig = EngineConfig()) -> tuple[str | None, str | None]:
+    """(first failing reason or None, final text) of one document through
+    the battery in stage order. The final text is the c4-rewritten text when
+    both gopher stages passed, the input text otherwise."""
+    ws = rf.words(text)  # one tokenization shared by both gopher stages
+    reason = rf.gopher_repetition(text, cfg.gopher_repetition, ws=ws)
+    new_text = text
+    if reason is None:
+        reason = rf.gopher_quality(text, cfg.gopher_quality, ws=ws)
+    if reason is None:
+        reason, new_text = rf.c4_quality(text, cfg.c4)
+        if reason is None:
+            reason = rf.fineweb_quality(new_text, cfg.fineweb)
+    return reason, new_text
 
+
+def make_udf(cfg: EngineConfig = EngineConfig()):
     @F.pandas_udf(RESULT_SCHEMA)
     def quality_battery(texts: pd.Series) -> pd.DataFrame:
-        from datatrove_spark.reference_impl import filters as rf
-
         reasons, outs = [], []
         for t in texts:
-            ws = rf.words(t)  # one tokenization shared by both gopher stages
-            reason = rf.gopher_repetition(t, rep_cfg, ws=ws)
-            new_text = t
-            if reason is None:
-                reason = rf.gopher_quality(t, gq_cfg, ws=ws)
-            if reason is None:
-                reason, new_text = rf.c4_quality(t, c4_cfg)
-                if reason is None:
-                    reason = rf.fineweb_quality(new_text, fw_cfg)
+            reason, new_text = battery(t, cfg)
             reasons.append(reason)
             # NULL means "unchanged": only c4-rewritten docs ship text back
             # over Arrow (apply() coalesces with the input column JVM-side).

@@ -5,10 +5,13 @@ The reference executes a Python list of PipelineStep objects per rank
 completion markers for resume (:106-127) and per-step counters. Here:
 
 - a *stage* is a named ``DataFrame -> DataFrame`` transformation that may add
-  ``<name>_reason`` / ``<name>_keep`` / rewritten-text columns — composition
-  builds ONE lazy Catalyst plan, so whole-stage codegen fuses every native
-  stage and Arrow pipelining batches the pandas-UDF stages; nothing
-  materializes between stages.
+  any number of ``*_reason`` / ``*_keep`` / rewritten-text columns —
+  composition builds ONE lazy Catalyst plan, so whole-stage codegen fuses
+  every native stage; nothing materializes between stages. The canonical
+  flow has a single pandas-UDF stage (langid -> quality battery -> PII in
+  one Arrow UDF): each pandas-UDF stage whose input is another's output
+  becomes its own ArrowEvalPython node, i.e. one more Python worker per
+  task and one more Arrow round trip of the text.
 - ``run_pipeline`` materializes once into a dual sink: a single
   ``partitionBy("keep")`` parquet write (kept + removed in one pass — no
   cache of the full corpus, no recompute; the Iceberg equivalent is
@@ -16,8 +19,8 @@ completion markers for resume (:106-127) and per-step counters. Here:
 - resume: a stage output whose ``_SUCCESS`` marker exists is not recomputed
   (the file-level analog of checking an Iceberg snapshot).
 - metrics: per-reason counts + per-partition lineage rows are computed from
-  the *written* files (cheap column-pruned scan) and saved as JSON —
-  matching the reference's Stats JSON (executor/base.py:92-98).
+  the *written* files (one column-pruned rescan, one aggregation) and saved
+  as JSON — matching the reference's Stats JSON (executor/base.py:92-98).
 """
 
 from __future__ import annotations
@@ -27,12 +30,20 @@ import os
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from datatrove_spark.config import DEFAULT_CONFIG
+from datatrove_spark.operators import langid, pii, quality_fused, url_filter
 
 
 @dataclass(frozen=True)
 class Stage:
+    """A named ``DataFrame -> DataFrame`` step. It may add any number of
+    ``*_reason`` columns (NULL = the stage keeps the document), ``*_keep``
+    flags and rewritten-text columns."""
+
     name: str
     fn: Callable[[DataFrame], DataFrame]
 
@@ -42,14 +53,15 @@ class Stage:
 
 def compose(df: DataFrame, stages: Sequence[Stage]) -> DataFrame:
     """Chain stages into one lazy plan and derive the combined keep/drop:
-    drop_reason = first stage's reason in stage order (reference short-circuit
-    semantics, base_filter.py:45-63)."""
-    reason_cols = []
+    drop_reason = the first non-NULL of every ``*_reason`` column the stages
+    add, in the order they add them (reference short-circuit semantics,
+    base_filter.py:45-63). A stage that runs several filters reports each
+    through its own ``*_reason`` column."""
+    reason_cols: list[str] = []
     for st in stages:
+        before = set(df.columns)
         df = st(df)
-        rc = f"{st.name}_reason"
-        if rc in df.columns:
-            reason_cols.append(rc)
+        reason_cols += [c for c in df.columns if c.endswith("_reason") and c not in before]
     if reason_cols:
         reason = F.coalesce(*[F.col(c) for c in reason_cols])
     else:
@@ -61,41 +73,57 @@ def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
 
 
+def _text_kernels_udf():
+    """One pandas UDF running, per document, langid.py_langid, the quality
+    battery and pii.scrub of the battery's final text. Returns the language,
+    the unrounded language score, the battery's reason and the scrubbed text
+    (NULL when it equals the input, so unchanged docs ship nothing back)."""
+
+    @F.pandas_udf("struct<language:string, raw:double, reason:string, text:string>")
+    def langid_quality_pii(texts: pd.Series) -> pd.DataFrame:
+        langs, raws, reasons, outs = [], [], [], []
+        for t in texts:
+            lg, raw = langid.py_langid(t)
+            reason, final = quality_fused.battery(t, DEFAULT_CONFIG)
+            out = pii.scrub(final, DEFAULT_CONFIG.pii)
+            langs.append(lg)
+            raws.append(raw)
+            reasons.append(reason)
+            outs.append(None if out == t else out)
+        return pd.DataFrame({"language": langs, "raw": raws, "reason": reasons, "text": outs})
+
+    return langid_quality_pii
+
+
+def _text_kernels_stage(df: DataFrame) -> DataFrame:
+    k = _text_kernels_udf()(F.col("text"))
+    df = langid.with_language(df.withColumn("__k", k), F.col("__k.language"), F.col("__k.raw"))
+    return (
+        df.withColumn("quality_battery_reason", F.col("__k.reason"))
+        .withColumn("text", F.coalesce(F.col("__k.text"), F.col("text")))
+        .drop("__k")
+    )
+
+
 def canonical_stages(with_url_filter: bool = True) -> list[Stage]:
     """The FineWeb-order curation flow (examples/fineweb.py:34-63 analog):
-    cheap URL rules first, then language ID, then the fused quality battery
-    (rewrites text), then PII scrub (rewrites text). Predicate ordering is
+    cheap URL rules first (JVM-side), then ONE pandas-UDF stage that runs
+    language ID, the fused quality battery (c4 rewrites text) and the PII
+    scrub (rewrites text) per document, so each task holds one Python worker
+    and ships the text over Arrow once. The stage adds ``language``,
+    ``language_score``, ``langid_reason``, ``langid_keep`` and
+    ``quality_battery_reason`` and replaces ``text`` with the scrubbed
+    battery output. Every kernel runs on every document: a dropped doc's
+    stored text is still the scrubbed battery text. Predicate ordering is
     ours to choose — Catalyst won't reorder opaque UDF stages (SURVEY §4)."""
-    from datatrove_spark.operators import langid, pii, quality_fused
-
-    def quality(df: DataFrame) -> DataFrame:
-        out = quality_fused.apply(df)
-        return (
-            out.withColumnRenamed("drop_reason", "quality_battery_reason")
-            .withColumn("text", F.col("final_text"))
-            .drop("final_text", "keep")
-        )
-
-    def scrub(df: DataFrame) -> DataFrame:
-        return pii.apply(df).withColumn("text", F.col("pii_text")).drop("pii_text")
-
     stages = []
     if with_url_filter:
-        from datatrove_spark.config import DEFAULT_CONFIG
-
-        stages.append(Stage("url_filter", lambda df: _url_filter_stage(df)))
-    stages += [
-        Stage("langid", langid.apply),
-        Stage("quality_battery", quality),
-        Stage("pii", scrub),
-    ]
+        stages.append(Stage("url_filter", _url_filter_stage))
+    stages.append(Stage("langid_quality_pii", _text_kernels_stage))
     return stages
 
 
 def _url_filter_stage(df: DataFrame) -> DataFrame:
-    from datatrove_spark.config import DEFAULT_CONFIG
-    from datatrove_spark.operators import url_filter
-
     return url_filter.apply(df, cfg=DEFAULT_CONFIG.url_filter)
 
 
@@ -120,18 +148,20 @@ def run_pipeline(
         # "read the kept docs" into a file-level filter downstream.
         annotated.write.mode("overwrite").partitionBy("keep").parquet(data_dir)
 
-    written = _read(spark, data_dir)
-    by_reason = {
-        (r["drop_reason"] or "__kept__"): r["n"]
-        for r in written.groupBy("drop_reason").agg(F.count("*").alias("n")).collect()
-    }
-    # per-partition lineage: rows per spark input partition of the sink scan
-    lineage = [
-        {"partition": r["p"], "rows": r["n"]}
-        for r in written.groupBy(F.spark_partition_id().alias("p"))
+    # one rescan of the written files yields both the per-reason counts and
+    # the per-partition lineage (rows per spark input partition of the scan)
+    by_reason: dict[str, int] = {}
+    rows_of: dict[int, int] = {}
+    for r in (
+        _read(spark, data_dir)
+        .groupBy("drop_reason", F.spark_partition_id().alias("p"))
         .agg(F.count("*").alias("n"))
         .collect()
-    ]
+    ):
+        k = r["drop_reason"] or "__kept__"
+        by_reason[k] = by_reason.get(k, 0) + r["n"]
+        rows_of[r["p"]] = rows_of.get(r["p"], 0) + r["n"]
+    lineage = [{"partition": p, "rows": n} for p, n in sorted(rows_of.items())]
     metrics = {
         "total": int(sum(by_reason.values())),
         "kept": int(by_reason.get("__kept__", 0)),

@@ -59,6 +59,7 @@ from datatrove_spark.operators import (
     url_filter,
     winnowing,
 )
+from datatrove_spark.plans.pipeline import Stage, canonical_stages, compose
 
 TABLES = (
     "region",
@@ -145,19 +146,20 @@ JOIN c4 USING (doc_id) JOIN fw USING (doc_id)
 
 
 def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full north-rule flow under one hash gate: URL filter -> language
-    ID -> fused quality battery -> PII scrub of the surviving text. One row
-    per input document with the first drop reason in pipeline order, the
-    keep decision, and the curated (C4-rewritten + PII-scrubbed) text for
-    kept documents.
+    """The full north-rule flow under one hash gate, run through the
+    production path: ``compose`` over a URL-filter stage and
+    ``canonical_stages(with_url_filter=False)``, i.e. URL filter -> ONE
+    Arrow UDF running language ID, the quality battery and the PII scrub of
+    the battery's text. One row per input document with the first drop
+    reason in pipeline order, the keep decision, and the curated
+    (C4-rewritten + PII-scrubbed) text for kept documents.
 
-    Every stage runs on every document and the reasons coalesce in stage
-    order — the same shape as plans/pipeline.compose, which the production
-    run_pipeline uses. Because every stage is a pure per-document function
-    of its input text, this yields the keep/reason/text a short-circuiting
-    run would, and the oracle mirrors it as one query. Stage order follows
-    the reference's examples/fineweb.py (url filter -> langid -> gopher rep
-    -> gopher qual -> c4 -> fineweb -> PII formatter)."""
+    Every kernel runs on every document and compose coalesces the reasons
+    in stage order. Because every kernel is a pure per-document function of
+    its input text, this yields the keep/reason/text a short-circuiting run
+    would, and the oracle mirrors it as one query. Stage order follows the
+    reference's examples/fineweb.py (url filter -> langid -> gopher rep ->
+    gopher qual -> c4 -> fineweb -> PII formatter)."""
     df = load(spark, sf_dir, "documents").withColumn(
         "url",
         F.concat(
@@ -168,22 +170,14 @@ def _q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.pmod(F.col("doc_id"), F.lit(11)) == 0, "casino").otherwise("article"),
         ),
     )
-    df = url_filter.apply(df, cfg=_URLF_CFG)
-    df = langid.apply(df)
-    df = quality_pipeline(df)
-    df = pii.apply(df, text_col="final_text")
-    reason = F.coalesce(
-        F.col("url_filter_reason"),
-        F.when(~F.col("langid_keep"), F.lit("lang_filter")),
-        F.col("drop_reason"),
-    )
-    keep = reason.isNull()
+    stages = [Stage("url_filter", lambda d: url_filter.apply(d, cfg=_URLF_CFG))]
+    df = compose(df, stages + canonical_stages(with_url_filter=False))
     return df.select(
         "doc_id",
         "language",
-        reason.alias("curation_reason"),
-        keep.alias("curation_keep"),
-        F.when(keep, F.col("pii_text")).alias("curated_text"),
+        F.col("drop_reason").alias("curation_reason"),
+        F.col("keep").alias("curation_keep"),
+        F.when(F.col("keep"), F.col("text")).alias("curated_text"),
     )
 
 

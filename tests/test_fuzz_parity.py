@@ -148,6 +148,23 @@ def test_null_text_rows_survive_pipeline(spark):
     scrubbed = {r.doc_id: r.pii_text for r in pii.apply(df).collect()}
     assert scrubbed[0] == ""
 
+    # the curation flow (URL filter + the fused langid/battery/PII stage) on
+    # the NULL rows plus empty and whitespace-only text
+    from pyspark.sql import functions as F
+
+    from datatrove_spark.plans.pipeline import canonical_stages, compose
+
+    edge = df.unionByName(
+        spark.createDataFrame([(3, ""), (4, " \n\t")], "doc_id long, text string")
+    ).withColumn("url", F.lit("https://www.example.com/article"))
+    cur = {
+        r.doc_id: (r.text, r.language, r.langid_reason, r.quality_battery_reason, r.drop_reason)
+        for r in compose(edge, canonical_stages()).collect()
+    }
+    for i in (0, 2, 3):
+        assert cur[i] == ("", "und", "lang_filter", "gopher_short_doc", "lang_filter"), i
+    assert cur[4] == (" \n\t", "und", "lang_filter", "gopher_short_doc", "lang_filter")
+
 
 def test_ngram_backend_equivalence():
     """The numpy and Counter n-gram backends must agree on every doc — the

@@ -113,3 +113,25 @@ def test_sharded_resume_exact(spark, tmp_path):
     for p, ts in survivors.items():
         assert os.path.getmtime(p) == ts, f"completed shard recomputed: {p}"
     assert os.path.exists(os.path.join(victim, "data", "_SUCCESS"))
+
+
+def test_canonical_sink_columns(spark, tmp_path):
+    """The canonical flow's sink schema, pinned: the fused langid/battery/PII
+    stage writes the same columns, in the same order, as the separate
+    langid, quality battery and PII stages did. The input is parquet, as a
+    production run reads it (Spark 4.1 cannot evaluate a filter on a
+    pandas-UDF column over generate_pages' lambda text column)."""
+    from datatrove_spark.plans.pipeline import canonical_stages
+
+    src = str(tmp_path / "input")
+    generate_pages(spark, 200).write.parquet(src)
+    out = str(tmp_path / "canonical")
+    m = run_pipeline(spark, spark.read.parquet(src), canonical_stages(), out)
+    assert m["total"] == 200
+    assert spark.read.parquet(os.path.join(out, "data")).columns == [
+        "url", "warc_ts", "html", "text", "lang",
+        "url_filter_reason", "url_filter_keep",
+        "language", "language_score", "langid_reason", "langid_keep",
+        "quality_battery_reason", "drop_reason", "keep",
+    ]
+    assert kept(spark, out).filter(F.col("drop_reason").isNotNull()).count() == 0

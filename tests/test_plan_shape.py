@@ -137,20 +137,34 @@ def test_ngram_lm_broadcast_scoring_joins(spark, pages):
     assert p.count("SortMergeJoin") <= 1
 
 
+def _curation_flow(pages):
+    """The production north-rule flow: a URL-filter stage, then
+    canonical_stages(with_url_filter=False), composed."""
+    from datatrove_spark.operators import url_filter
+    from datatrove_spark.plans.pipeline import Stage, canonical_stages, compose
+
+    df = pages.withColumn("url", F.concat(F.lit("https://h.example.com/"), F.col("doc_id")))
+    return compose(df, [Stage("url_filter", url_filter.apply)] + canonical_stages(with_url_filter=False))
+
+
 def test_curation_pipeline_is_shuffle_free(pages):
     """The composed north-rule flow (URL filter -> langid -> quality battery
     -> PII scrub) is per-document end to end: one narrow stage, scan ->
     kernels -> project. An Exchange anywhere here would shuffle the full
     corpus text at every curation run."""
-    from datatrove_spark.operators import langid, pii, url_filter
-
-    df = pages.withColumn("url", F.concat(F.lit("https://h.example.com/"), F.col("doc_id")))
-    df = url_filter.apply(df)
-    df = langid.apply(df)
-    df = quality_pipeline(df)
-    df = pii.apply(df, text_col="final_text")
-    plan = plan_of(df.filter("url_filter_keep AND langid_keep AND keep"))
+    plan = plan_of(_curation_flow(pages).filter("keep"))
     assert "Exchange" not in plan, plan
+
+
+def test_curation_flow_single_python_udf_node(pages):
+    """langid, the quality battery and PII run in ONE ArrowEvalPython node:
+    every further node holds another Python worker per task and ships the
+    text over Arrow again (PII reads the battery's output, so Spark cannot
+    merge separate UDF stages)."""
+    import re
+
+    plan = plan_of(_curation_flow(pages))
+    assert len(re.findall(r"^\(\d+\) ArrowEvalPython", plan, re.M)) == 1, plan
 
 
 def test_jaccard_pairs_no_corpus_hof_no_array_broadcast(pages):
