@@ -5,20 +5,15 @@
 
 Two workloads:
 1. every __spark_entry__.queries() entry at $SPARK_GRAFT_SF_DIR
-   (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS];
+   (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (unset: one
+   slot per core of this process's CPU affinity);
 2. the flagship quality pipeline over a deterministically generated
    Common-Crawl-style `pages` table (input_hint shape) — the throughput
-   (docs/sec) headline. Fixed at 1M docs regardless of sf (override
-   BENCH_PAGES_DOCS) so every round's number is apples-to-apples with
-   BASELINE.md's measured 1M-doc table; the JSON reports the ratio.
-   Headline attempts are REST + PROBE gated and best-of-2 (see
-   gated_headline): the baseline was measured from a rested host, and this
-   host's all-core turbo collapses under sustained load with erratic
-   multi-minute recovery, so an ungated single sample mostly measures the
-   machine's thermal history, not the engine (BENCH.md calibration table).
+   (docs/sec) headline: one warm-up run, then one timed run. 1M docs
+   regardless of sf (override BENCH_PAGES_DOCS).
 
 BENCH_SCALING=1 additionally re-runs workload 2 at two parallelism levels
-(default 8 vs 32, override BENCH_SCALING_CORES="4,16") on the identical
+(default cpus/8 vs cpus/2, override BENCH_SCALING_CORES="4,16") on the identical
 input and reports throughput scaling efficiency — the in-sandbox evidence
 for the north rule's N vs 4N executor criterion (see BENCH.md).
 
@@ -74,147 +69,18 @@ def pages_pipeline_run(spark, n_docs: int) -> tuple[float, int]:
     return time.perf_counter() - t0, n
 
 
-def _spin(iters: int) -> int:
-    x = 1
-    for _ in range(iters):
-        x = (x * 1103515245 + 12345) % 2147483647
-    return x
-
-
-def cpu_probe() -> float:
-    """All-core spin probe: wall seconds for every affinity core to finish a
-    fixed pure-Python arithmetic loop — a direct readout of the host's
-    current sustained all-core speed (no cpufreq/thermal sysfs exists in
-    this sandbox). Runs in a FRESH subprocess: probes taken inside a
-    long-lived Spark-driver process were measured drifting upward (0.78 ->
-    1.27) while a fresh process read 0.77 at the same instant."""
-    import subprocess
-
-    env = dict(os.environ, BENCH_PROBE_WORKER="1")
-    r = subprocess.run(
-        [sys.executable, os.path.abspath(__file__)], env=env, capture_output=True, text=True
-    )
-    lines = r.stdout.strip().splitlines()
-    if r.returncode != 0 or not lines:
-        raise RuntimeError(
-            f"cpu_probe subprocess failed (rc={r.returncode}): {r.stderr[-2000:]}"
-        )
-    return float(lines[-1])
-
-
-def _probe_worker() -> None:
-    import multiprocessing as mp
-
-    n = len(os.sched_getaffinity(0))
-    with mp.get_context("fork").Pool(n) as p:
-        t0 = time.perf_counter()
-        p.map(_spin, [3_000_000] * n)
-        print(f"{time.perf_counter() - t0:.3f}")
-
-
-def rest_and_gate(rest: int, target: float, cap: int) -> tuple[float, int]:
-    """Continuous rest, then sleep-and-reprobe until the spin probe reaches
-    `target` or `cap` total seconds have passed. Returns (probe, waited)."""
-    time.sleep(rest)
-    waited, probe = rest, cpu_probe()
-    while probe > target and waited < cap:
-        time.sleep(60)
-        waited += 60
-        probe = cpu_probe()
-    return probe, waited
-
-
-def gated_headline(spark, n_pages: int) -> dict:
-    """Best-of-N headline attempts, each preceded by a REST + PROBE gate.
-
-    Why both: BASELINE.md's 73,221 docs/s was measured from a rested host,
-    and this host's all-core turbo collapses under sustained load with
-    erratic multi-minute recovery (calibration 2026-08-17, BENCH.md): the
-    same binary read 79k docs/s after ~5 min of rest (probe 0.64 s) but 55k
-    straight after 60 s of load even though the instantaneous probe had
-    already recovered to 0.69 s — the spent turbo *budget*, not the
-    instantaneous clock, decides the run. So each attempt (a) rests a
-    continuous BENCH_HEADLINE_REST_S (default 180 s), then (b) requires the
-    spin probe at or under BENCH_PROBE_TARGET_S (default 0.70 s, vs the
-    0.62-0.65 s rested-host range), sleeping in 60 s steps up to
-    BENCH_MAX_COOLDOWN_S (default 480 s) before running anyway with the
-    timeout flagged in the JSON. Best of BENCH_HEADLINE_ATTEMPTS (default 2)
-    is recorded — a single sample on this host is not evidence either way."""
-    rest = int(os.environ.get("BENCH_HEADLINE_REST_S", "180"))
-    target = float(os.environ.get("BENCH_PROBE_TARGET_S", "0.70"))
-    cap = int(os.environ.get("BENCH_MAX_COOLDOWN_S", "480"))
-    attempts = int(os.environ.get("BENCH_HEADLINE_ATTEMPTS", "2"))
-    if n_pages < 100_000:  # sub-scale smoke run: not throughput evidence
-        rest, cap, attempts = 0, 0, 1
-
-    runs = []
-    for i in range(attempts):
-        probe, waited = rest_and_gate(rest, target, cap)
-        t, kept = pages_pipeline_run(spark, n_pages)
-        runs.append(
-            {
-                "docs_per_sec": round(n_pages / t, 1),
-                "sec": round(t, 2),
-                "probe_s": probe,
-                "gate_waited_s": waited,
-                "gate_timed_out": probe > target,
-                "kept": kept,
-            }
-        )
-    best = max(runs, key=lambda r: r["docs_per_sec"])
-    # State-comparable subset: BASELINE.md's 73,221 docs/s was measured at a
-    # rested probe of 0.62-0.65 s. A run whose probe is BELOW that band ran
-    # on a better-than-baseline host state (observed 0.568 s -> 125.9k
-    # docs/s), so its ratio overstates; one above the target band ran hot
-    # and understates. headline_conservative is the best run inside the
-    # band — the number cross-round trend tables should use (judged
-    # round-4 ADVICE); headline_best is the fastest state observed.
-    lo = float(os.environ.get("BENCH_PROBE_BASELINE_MIN_S", "0.62"))
-    comparable = [r for r in runs if lo <= r["probe_s"] <= target]
-    conservative = max(comparable, key=lambda r: r["docs_per_sec"]) if comparable else None
-    return {
-        "best": best,
-        "conservative": conservative,
-        "runs": runs,
-        "probe_target_s": target,
-        "probe_baseline_band_s": [lo, target],
-    }
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
     n_pages = int(os.environ.get("BENCH_PAGES_DOCS", "1000000"))
 
-    spark = get_spark(app_name="bench", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark(app_name="bench")
+    cpus = spark.sparkContext.defaultParallelism
     time_query(e.queries()["quality_pipeline"], spark, sf_dir)  # JVM/Arrow warmup
 
-    # Headline FIRST, in the coolest state this process will ever be in:
-    # BASELINE.md's 73,221 docs/s was measured from a rested host, and the
-    # host drops its all-core turbo ~40% within seconds of sustained full
-    # load with multi-minute recovery (BENCH.md), so measuring after the
-    # suite would systematically understate the ratio. Each attempt is
-    # rest+probe gated (see gated_headline) — the round-2 recording showed
-    # a fixed 120 s sleep does NOT reliably restore the rested state after
-    # the 1M-doc generation.
-    pages_path(spark, n_pages)  # generation excluded from cool-down + timing
+    pages_path(spark, n_pages)  # generation is not timed
     pages_pipeline_run(spark, 2000)  # warm the generated-pages path
-    headline = gated_headline(spark, n_pages)
-    pages_t = headline["best"]["sec"]
-    pages_kept = headline["best"]["kept"]
-
-    # The suite starts straight after the second 1M-doc headline run, i.e.
-    # at the host's hottest: one driver-shaped trial recorded the first ~6
-    # alphabetical queries 3-5x slow (ann_topk 6.5 s vs 1.6 s, bloom 4.5 vs
-    # 1.1) on BOTH best-of-N runs while a cooler trial read them normal —
-    # so give the suite the same rest+probe gate before its clock starts.
-    if n_pages >= 100_000:  # skip for sub-scale smoke runs
-        rest_and_gate(
-            int(os.environ.get("BENCH_SUITE_REST_S", "90")),
-            float(os.environ.get("BENCH_PROBE_TARGET_S", "0.70")),
-            300,
-        )
+    pages_t, pages_kept = pages_pipeline_run(spark, n_pages)
 
     # Suite queries run best-of-N (default 3) with the SQL cache cleared
     # before every run: the host shows transient multi-second stalls (one
@@ -248,53 +114,25 @@ def main() -> None:
         "rows": rows,
         "pages_docs": n_pages,
         "pages_docs_per_sec": round(n_pages / pages_t, 1),
-        # BASELINE.md measured 73,221 docs/s at 32 cores on this same 1M-doc
-        # table (rested host, affinity-pinned); headline attempts are
-        # rest+probe gated for state-matched comparability — see BENCH.md
-        # thermal methodology and the 2026-08-17 calibration table
-        "baseline_docs_per_sec": 73221,
-        "vs_baseline": round((n_pages / pages_t) / 73221, 3),
-        "headline": headline,
-        # named so cross-round comparisons never pick the wrong convention:
-        # best = fastest observed host state; conservative = best run whose
-        # probe sat inside the baseline's rested band (state-comparable)
-        "headline_best": headline["best"]["docs_per_sec"],
-        "headline_conservative": (
-            headline["conservative"]["docs_per_sec"] if headline["conservative"] else None
-        ),
     }
 
     if os.environ.get("BENCH_SCALING") == "1":
         spark.stop()
         import subprocess
 
-        # Default pair 4 vs 16 (not 8 vs 32): with all 32 host cores busy the
-        # sandbox CPU drops its clock (measured: pure-CPU multiprocessing
-        # scales 8->32 at only 0.81), an artifact of co-located cores that a
-        # real N vs 4N *executor* comparison (separate machines, same clocks)
-        # does not have. 4 vs 16 stays in the frequency-stable region; both
-        # pairs are reported in BENCH.md.
+        # Default pair cpus/8 vs cpus/2: on the 32-core host, 8 vs 32 measured
+        # the all-core clock drop of a fully busy host, not the engine (BENCH.md).
         default_pair = f"{max(1, cpus // 8)},{max(4, cpus // 2)}"
         cores_pair = [int(x) for x in os.environ.get("BENCH_SCALING_CORES", default_pair).split(",")]
         # scaling needs a compute-bound run (tens of seconds per level) or
         # fixed per-job overhead pollutes the ratio — use >= 1M docs
         scaling_pages = max(n_pages, 1_000_000)
-        s = get_spark(app_name="bench-gen", master=f"local[{cpus}]", shuffle_partitions=cpus)
+        s = get_spark(app_name="bench-gen")
         pages_path(s, scaling_pages)
         s.stop()
-        # Thermal ordering: the host lowers all-core turbo as the package
-        # heats, which hits the MANY-core level hard (-30% straight after a
-        # long full-load run) while the few-core level barely notices (few
-        # active cores keep high turbo even warm). Equal-state ordering is
-        # impossible by waiting alone, so measure DESCENDING — the sensitive
-        # level first, in the coolest state available — and give every level
-        # the same rest+probe gate the headline uses (round 3; previously a
-        # fixed 90 s sleep). Measured efficiency: 0.93 idle-machine, 0.85
-        # warm-machine descending, vs 0.69 ascending.
-        cooldown = int(os.environ.get("BENCH_COOLDOWN_S", "120"))
+        # Descending: the many-core level, the one sensitive to host state, runs first.
         perf = {}
         for c in sorted(cores_pair, reverse=True):
-            rest_and_gate(cooldown, float(os.environ.get("BENCH_PROBE_TARGET_S", "0.70")), 420)
             env = dict(os.environ, BENCH_SCALING_WORKER=str(c), BENCH_PAGES=str(scaling_pages))
             r = subprocess.run(
                 [sys.executable, os.path.abspath(__file__)], env=env, capture_output=True, text=True
@@ -349,9 +187,7 @@ def scaling_worker(c: int) -> None:
 
 
 if __name__ == "__main__":
-    if os.environ.get("BENCH_PROBE_WORKER"):
-        _probe_worker()
-    elif os.environ.get("BENCH_SCALING_WORKER"):
+    if os.environ.get("BENCH_SCALING_WORKER"):
         scaling_worker(int(os.environ["BENCH_SCALING_WORKER"]))
     else:
         main()

@@ -47,12 +47,10 @@ from datatrove_spark.operators import (
     quality_fused,
     readability,
     sampling,
-    relational,
     sentence_dedup,
     tokenizer,
     simhash,
     similarity,
-    time_series,
     token_stats,
     unigram_logprob,
     url_dedup,
@@ -61,18 +59,7 @@ from datatrove_spark.operators import (
 )
 from datatrove_spark.plans.pipeline import Stage, canonical_stages, compose
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+TABLES = ("documents", "embeddings")
 
 
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
@@ -669,31 +656,6 @@ def _q_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.pricing_summary(load(spark, sf_dir, "lineitem"))
-
-
-def _q_top_revenue_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return relational.top_revenue_orders(
-        load(spark, sf_dir, "customer"),
-        load(spark, sf_dir, "orders"),
-        load(spark, sf_dir, "lineitem"),
-    )
-
-
-def _q_region_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = {t: load(spark, sf_dir, t) for t in ("lineitem", "orders", "customer", "supplier", "nation", "region")}
-    return relational.region_revenue(tables)
-
-
-def _q_events_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return time_series.window_agg(load(spark, sf_dir, "events"))
-
-
-def _q_events_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return time_series.sessionize(load(spark, sf_dir, "events"))
-
-
 def _q_sampler(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = sampling.deterministic_sample(load(spark, sf_dir, "documents"), 0.3, "doc_id", salt="s1")
     return df.select("doc_id")
@@ -861,11 +823,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
         f"x -> x::VARCHAR), ',') AS token_ids, "
         f"len({tokenizer.sql_token_ids('text')}) AS n_tokens FROM documents",
     ),
-    "pricing_summary": (_q_pricing_summary, relational.oracle_sql_pricing_summary()),
-    "top_revenue_orders": (_q_top_revenue_orders, relational.oracle_sql_top_revenue_orders()),
-    "region_revenue": (_q_region_revenue, relational.oracle_sql_region_revenue()),
-    "events_window_agg": (_q_events_window_agg, time_series.oracle_sql_window_agg()),
-    "events_sessions": (_q_events_sessions, time_series.oracle_sql_sessionize()),
     "host_stats": (
         _q_host_stats,
         f"WITH u AS (SELECT *, {_URL_SQL} AS url FROM documents)\n"

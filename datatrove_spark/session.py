@@ -1,7 +1,7 @@
 """SparkSession factory tuned for web-scale curation workloads.
 
-All knobs here are chosen for the 100TB/1000-executor target, not just the
-local[32] sandbox:
+All knobs here are chosen for the 100TB/1000-executor target, not just a
+local[N] sandbox:
 
 - AQE on (runtime coalescing + skew-join splitting): hot hosts / hot minhash
   buckets are the known skew sources of this workload (SURVEY.md section 4).
@@ -26,11 +26,13 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with curation-tuned defaults.
 
-    master defaults to local[$SPARK_GRAFT_CPUS] (env, default 32) so the same
-    entry points work for pytest, bench.py and the driver harness.
+    master defaults to local[$SPARK_GRAFT_CPUS], and to one slot per core this
+    process may run on (its CPU affinity) when that env is unset, so the same
+    entry points work for pytest, bench.py and the driver harness without
+    oversubscribing the host.
     """
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus = os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         # local[N] -> N; local[*] / cluster -> 2x default parallelism is a

@@ -47,6 +47,11 @@ def test_keep_drop_f1_vs_reference(spark, corpus, ref_labels):
     df = spark.createDataFrame(list(corpus.items()), "doc_id long, text string")
     ours = {r.doc_id: (r.keep, r.drop_reason, r.final_text) for r in quality_pipeline(df).collect()}
 
+    # the generated pages are well-formed: the reference must not crash on
+    # any of them (a crash doc is excluded from F1 below)
+    pages = sorted(corpus)[-2000:]
+    assert not [i for i in pages if ref_labels[i][1] == "__reference_error__"]
+
     tp = fp = fn = tn = 0
     for i, (ref_keep, ref_reason, _) in ref_labels.items():
         if ref_reason == "__reference_error__":

@@ -69,6 +69,20 @@ def test_rows_only(spark, name):
     assert df.count() >= 0
 
 
+def test_correctness_record_matches_registry():
+    """The committed full-gate record covers exactly the registry's rows, and
+    every row with an oracle hash-MATCHes without error."""
+    import json
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(os.path.join(root, "CORRECTNESS_full_r6.json")) as f:
+        record = json.load(f)
+    assert set(record) == set(registry.queries())
+    checked = {n: (r["hash_match"], r["err"]) for n, r in record.items() if n in ORACLES}
+    assert {n: v for n, v in checked.items() if v != (True, None)} == {}
+
+
 def test_entry_smoke(spark):
     import __spark_entry__ as e
 
