@@ -3,20 +3,25 @@
 Each entry maps a name from SURVEY.md §2 to
 
     spark:  Callable[(SparkSession, sf_dir str)] -> DataFrame
-    oracle: equivalent DuckDB ANSI-SQL string (or None for ops whose
-            semantics are not single-query SQL-expressible; those get the
-            weaker rows-only check)
+    oracle: equivalent DuckDB ANSI-SQL string
 
 Column-name contract: every computed column is aliased identically in the
-Spark plan and the SQL so the driver's order-insensitive value-hash compare
-(sort columns by name, hash values) matches exactly. Float-valued outputs are
-rounded to a fixed scale on BOTH sides for bit-stable hashes.
+Spark plan and the SQL so the driver's order-insensitive compare
+(``compare_frames``: sort columns by name and rows by their repr, then require
+the same pandas dtypes and the same hash of the cell reprs) matches exactly.
+Float-valued outputs are rounded to a fixed scale on BOTH sides for
+bit-stable hashes. ``check`` runs one entry against its oracle; pytest and
+``scripts/check_correctness.py`` both call it.
 """
 
 from __future__ import annotations
 
+import hashlib
+import time
 from collections.abc import Callable
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -592,8 +597,8 @@ def _q_c4_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # model-free environment -> exercises the documented deterministic fallback
-# path (same output schema as the fastText-backed path; model loading is
-# covered by tests/test_registry_parity rows-only + unit tests)
+# path (same output schema as the fastText-backed path; its model-loading
+# UDF factory is built in tests/test_gated_udfs.py)
 _FT_LABELS = ("en", "fr")
 
 
@@ -837,3 +842,79 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: sql for name, (_, sql) in REGISTRY.items() if sql is not None}
+
+
+def duck_connect(sf_dir: str):
+    """DuckDB connection with the views the driver pre-registers: one per
+    ``TABLES`` entry over ``sf_dir``'s parquet file."""
+    import duckdb
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+    return con
+
+
+def _canon(df: pd.DataFrame) -> pd.DataFrame:
+    """Columns sorted by name, rows stable-sorted by the repr of each row
+    (list cells are unhashable, so no value sort)."""
+    df = df[sorted(df.columns)].copy()
+    for col in df.columns:
+        # Spark's toPandas yields datetime64[ns], duckdb's .df() datetime64[us];
+        # the cells repr identically, so normalize the unit, not the values.
+        if str(df[col].dtype).startswith("datetime64"):
+            df[col] = df[col].astype("datetime64[us]")
+    if len(df):
+        key = df.apply(lambda r: repr(tuple(r)), axis=1)
+        df = df.iloc[np.argsort(key.to_numpy(), kind="stable")]
+    return df.reset_index(drop=True)
+
+
+def _frame_hash(df: pd.DataFrame) -> str:
+    h = hashlib.sha256()
+    h.update("|".join(str(c) for c in df.columns).encode())
+    for col in df.columns:
+        h.update(b"\x00col\x00")
+        for v in df[col].tolist():
+            h.update(repr(v).encode())
+            h.update(b"\x00")
+    return h.hexdigest()
+
+
+def compare_frames(spark_pd: pd.DataFrame, oracle_pd: pd.DataFrame) -> tuple[bool, bool, str | None]:
+    """The driver's compare of a Spark ``toPandas()`` frame with a DuckDB
+    ``.df()`` frame, order-insensitive in rows and columns. Returns
+    ``(schema_match, hash_match, diff)``: ``schema_match`` is the same column
+    names with the same dtypes (int64 vs float64 fails), ``hash_match`` is
+    ``schema_match`` plus an equal sha256 over every cell's repr (1.0 vs
+    1.0000000001 fails, NaN equals NaN), and ``diff`` names the first
+    difference, or is None on a match."""
+    s, d = _canon(spark_pd), _canon(oracle_pd)
+    s_schema = [(c, str(t)) for c, t in s.dtypes.items()]
+    d_schema = [(c, str(t)) for c, t in d.dtypes.items()]
+    if s_schema != d_schema:
+        return False, False, f"schema {s_schema} vs {d_schema}"
+    if _frame_hash(s) == _frame_hash(d):
+        return True, True, None
+    if len(s) != len(d):
+        return True, False, f"rows {len(s)} vs {len(d)}"
+    cells = (
+        (c, i, a, b) for c in s.columns for i, (a, b) in enumerate(zip(s[c].tolist(), d[c].tolist()))
+    )
+    c, i, a, b = next(cell for cell in cells if repr(cell[2]) != repr(cell[3]))
+    return True, False, f"first diff {c}[{i}]: {a!r} vs {b!r}"
+
+
+def check(spark: SparkSession, con, name: str, sf_dir: str) -> dict:
+    """Run entry ``name`` on ``sf_dir`` and its oracle in ``con`` (see
+    ``duck_connect``); return the record row of ``CORRECTNESS_full_r*.json``."""
+    t0 = time.monotonic()
+    fn, sql = REGISTRY[name]
+    spark_pd = fn(spark, sf_dir).toPandas()
+    oracle_pd = con.sql(sql).df()
+    schema_match, hash_match, diff = compare_frames(spark_pd, oracle_pd)
+    return {
+        "rows_match": len(spark_pd) == len(oracle_pd), "schema_match": schema_match,
+        "hash_match": hash_match, "spark_rows": len(spark_pd), "oracle_rows": len(oracle_pd),
+        "err": None, "sec": round(time.monotonic() - t0, 2), "diff": diff,
+    }

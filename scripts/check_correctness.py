@@ -1,9 +1,12 @@
 #!/usr/bin/env python
-"""Driver-shaped correctness check: run every __spark_entry__.queries() entry
-and compare against its oracle_sql() via DuckDB at sf0.01 (or $SPARK_GRAFT_SF_DIR).
+"""Driver-shaped correctness check: run every registry entry and compare it
+with its oracle_sql() via DuckDB at sf0.01 (or $SPARK_GRAFT_SF_DIR), the way
+the driver does: ``registry.check`` takes the Spark ``toPandas()`` frame and
+the DuckDB ``.df()`` frame and requires the same columns, the same pandas
+dtypes and the same hash of the cell reprs, in any row or column order.
 
-Prints one line per query: MATCH / MISMATCH / ROWS_ONLY, and exits non-zero
-on any mismatch.
+Prints one line per query: MATCH / MISMATCH / ERROR, and exits non-zero on
+any failure.
 
 Usage: check_correctness.py [--json OUT.json] [query_name ...]
 With query names, only those registry entries run (fast iteration); --json
@@ -14,98 +17,52 @@ CORRECTNESS_r{N}.json shape so every round can commit its own full record
 
 from __future__ import annotations
 
-import math
+import argparse
+import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import __spark_entry__ as e  # noqa: E402
-from datatrove_spark import get_spark  # noqa: E402
-from datatrove_spark.registry import TABLES  # noqa: E402
-
-
-def normalize(rows, columns):
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def nv(v):
-        if isinstance(v, float):
-            return "NaN" if math.isnan(v) else round(v, 9)
-        return v
-
-    out = sorted((tuple(nv(r[i]) for i in order) for r in rows), key=repr)
-    return sorted(columns), out
+from datatrove_spark import get_spark, registry  # noqa: E402
 
 
 def main() -> int:
-    import argparse
-    import json
-    import time
-
     ap = argparse.ArgumentParser()
     ap.add_argument("--json", default=None, help="write per-query results JSON here")
     ap.add_argument("names", nargs="*", help="subset of registry query names to run")
     argv = ap.parse_args()
 
+    names = sorted(argv.names or registry.queries())
+    unknown = [n for n in names if n not in registry.queries()]
+    if unknown:
+        print(f"unknown queries: {unknown}")
+        return 2
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-
+    con = registry.duck_connect(sf_dir)
     spark = get_spark(app_name="check-correctness")
-    qs, oracles = e.queries(), e.oracle_sql()
-    if argv.names:
-        unknown = [n for n in argv.names if n not in qs]
-        if unknown:
-            print(f"unknown queries: {unknown}")
-            return 2
-        qs = {n: qs[n] for n in argv.names}
     failed = []
     results: dict[str, dict] = {}
-    for name, fn in sorted(qs.items()):
+    for name in names:
         t0 = time.monotonic()
         try:
-            sdf = fn(spark, sf_dir)
-            s_rows = [tuple(r) for r in sdf.collect()]
-            if name not in oracles:
-                print(f"{name:28s} ROWS_ONLY rows={len(s_rows)}")
-                results[name] = {
-                    "rows_match": None, "schema_match": None, "hash_match": None,
-                    "spark_rows": len(s_rows), "oracle_rows": None, "err": None,
-                    "sec": round(time.monotonic() - t0, 2),
-                }
-                continue
-            rel = con.sql(oracles[name])
-            d_rows = [tuple(r) for r in rel.fetchall()]
-            sc, sr = normalize(s_rows, sdf.columns)
-            dc, dr = normalize(d_rows, list(rel.columns))
-            res = {
-                "rows_match": len(sr) == len(dr), "schema_match": sc == dc,
-                "hash_match": sr == dr and sc == dc,
-                "spark_rows": len(sr), "oracle_rows": len(dr), "err": None,
-                "sec": round(time.monotonic() - t0, 2),
-            }
-            results[name] = res
-            if sc != dc:
-                print(f"{name:28s} MISMATCH columns {sc} vs {dc}")
-                failed.append(name)
-            elif sr != dr:
-                bad = sum(1 for a, b in zip(sr, dr) if a != b) + abs(len(sr) - len(dr))
-                first = next(((a, b) for a, b in zip(sr, dr) if a != b), None)
-                print(f"{name:28s} MISMATCH rows={len(sr)}/{len(dr)} bad={bad} first={first}")
-                failed.append(name)
-            else:
-                print(f"{name:28s} MATCH rows={len(sr)} ({res['sec']}s)")
+            res = registry.check(spark, con, name, sf_dir)
         except Exception as ex:  # noqa: BLE001
-            print(f"{name:28s} ERROR {type(ex).__name__}: {str(ex)[:200]}")
-            results[name] = {
+            err = f"{type(ex).__name__}: {str(ex)[:200]}"
+            print(f"{name:28s} ERROR {err}")
+            res = {
                 "rows_match": False, "schema_match": False, "hash_match": False,
-                "spark_rows": None, "oracle_rows": None,
-                "err": f"{type(ex).__name__}: {str(ex)[:200]}",
-                "sec": round(time.monotonic() - t0, 2),
+                "spark_rows": None, "oracle_rows": None, "err": err,
+                "sec": round(time.monotonic() - t0, 2), "diff": None,
             }
+        else:
+            if res["hash_match"]:
+                print(f"{name:28s} MATCH rows={res['spark_rows']} ({res['sec']}s)")
+            else:
+                print(f"{name:28s} MISMATCH rows={res['spark_rows']}/{res['oracle_rows']} {res['diff']}")
+        results[name] = res
+        if not res["hash_match"]:
             failed.append(name)
     if argv.json:
         with open(argv.json, "w") as f:

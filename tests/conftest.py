@@ -2,21 +2,11 @@ from __future__ import annotations
 
 import pytest
 
-from datatrove_spark.registry import TABLES
+from datatrove_spark.registry import duck_connect
 from datatrove_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
-
-
-def duck_connect(sf_dir: str):
-    """DuckDB connection with the same pre-registered views the driver uses."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
-    return con
 
 
 def duck_documents(rows):

@@ -76,7 +76,7 @@ def test_non_sqrt_temperature_alpha03(spark):
     must match the q_l ∝ n_l^alpha expectation within sampler granularity,
     and the thresholds must agree with an independent DuckDB pow() rendering
     to within 1 unit in 1e6 (the documented last-ulp caveat)."""
-    from tests.conftest import duck_connect
+    from datatrove_spark.registry import duck_connect
 
     alpha, budget_frac = 0.3, 0.5
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")

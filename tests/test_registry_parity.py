@@ -1,77 +1,51 @@
-"""Driver-shaped correctness gate: for every registry entry with a SQL
-oracle, run the Spark query and the DuckDB oracle on the same parquet tables
-and compare row sets exactly (the driver hashes sorted values; we compare the
-values themselves for debuggable failures)."""
+"""Driver-shaped correctness gate: for every registry entry, run the Spark
+query and its DuckDB oracle on the same parquet tables and compare them the
+way the driver does (``registry.compare_frames``: pandas frames, dtype-exact,
+hashed cell reprs)."""
 
 from __future__ import annotations
 
-import math
-
+import numpy as np
+import pandas as pd
 import pytest
 
 from datatrove_spark import registry
 from tests.conftest import SF_MEDIUM, SF_SMALL, duck_documents
 
-ORACLES = registry.oracle_sql()
 NAMES = sorted(registry.queries())
 
 
-def normalize(rows, columns):
-    """Sort columns by name, then rows; normalize NaN/float for comparison."""
-    order = sorted(range(len(columns)), key=lambda i: columns[i])
-
-    def norm_val(v):
-        if isinstance(v, float):
-            if math.isnan(v):
-                return "NaN"
-            return round(v, 9)
-        return v
-
-    out = [tuple(norm_val(r[i]) for i in order) for r in rows]
-    out.sort(key=repr)
-    return [c for c in sorted(columns)], out
-
-
 def run_compare(spark, duck, name, sf_dir):
-    fn = registry.queries()[name]
-    sdf = fn(spark, sf_dir)
-    s_cols = sdf.columns
-    s_rows = [tuple(r) for r in sdf.collect()]
-
-    rel = duck.sql(ORACLES[name])
-    d_cols = list(rel.columns)
-    d_rows = [tuple(r) for r in rel.fetchall()]
-
-    sc, sr = normalize(s_rows, s_cols)
-    dc, dr = normalize(d_rows, d_cols)
-    assert sc == dc, f"{name}: column mismatch {sc} vs {dc}"
-    assert len(sr) == len(dr), f"{name}: row count {len(sr)} vs {len(dr)}"
-    mism = [(a, b) for a, b in zip(sr, dr) if a != b]
-    assert not mism, f"{name}: {len(mism)} row mismatches; first: {mism[0]}"
+    res = registry.check(spark, duck, name, sf_dir)
+    assert res["hash_match"], f"{name}: {res['diff']}"
 
 
-@pytest.mark.parametrize("name", [n for n in NAMES if n in ORACLES])
+@pytest.mark.parametrize("name", NAMES)
 def test_oracle_parity_small(spark, duck_small, name):
     run_compare(spark, duck_small, name, SF_SMALL)
 
 
-@pytest.mark.parametrize("name", [n for n in NAMES if n in ORACLES])
+@pytest.mark.parametrize("name", NAMES)
 def test_oracle_parity_medium(spark, duck_medium, name):
     run_compare(spark, duck_medium, name, SF_MEDIUM)
 
 
-@pytest.mark.parametrize("name", [n for n in NAMES if n not in ORACLES])
-def test_rows_only(spark, name):
-    """Entries without a SQL oracle must still run and return a stable schema."""
-    fn = registry.queries()[name]
-    df = fn(spark, SF_SMALL)
-    assert df.columns
-    assert df.count() >= 0
+def test_compare_frames_is_dtype_exact():
+    """Row and column order and NaN do not matter; a dtype or a last-digit
+    float difference does, where a rounded value compare would pass both."""
+    base = pd.DataFrame({"doc_id": [1, 2, 3], "score": [0.5, np.nan, 1.0]})
+    assert registry.compare_frames(base, base.iloc[[2, 0, 1], ::-1]) == (True, True, None)
+    as_float = base.assign(doc_id=base.doc_id.astype("float64"))
+    assert registry.compare_frames(base, as_float)[:2] == (False, False)
+    near = base.assign(score=[0.5, np.nan, 1.0000000001])
+    schema_match, hash_match, diff = registry.compare_frames(base, near)
+    assert (schema_match, hash_match) == (True, False)
+    assert diff.startswith("first diff score[")
 
 
 def test_correctness_record_matches_registry():
     """The committed full-gate record covers exactly the registry's rows, and
-    every row with an oracle hash-MATCHes without error."""
+    every row hash-MATCHes without error."""
     import json
     import os
 
@@ -79,7 +53,7 @@ def test_correctness_record_matches_registry():
     with open(os.path.join(root, "CORRECTNESS_full_r6.json")) as f:
         record = json.load(f)
     assert set(record) == set(registry.queries())
-    checked = {n: (r["hash_match"], r["err"]) for n, r in record.items() if n in ORACLES}
+    checked = {n: (r["hash_match"], r["err"]) for n, r in record.items()}
     assert {n: v for n, v in checked.items() if v != (True, None)} == {}
 
 
@@ -88,7 +62,7 @@ def test_entry_smoke(spark):
 
     df = e.entry(spark)
     assert df.count() > 0
-    assert set(e.queries()) >= set(e.oracle_sql())
+    assert set(e.queries()) == set(e.oracle_sql())
 
 
 LANGID_DOCS = [
