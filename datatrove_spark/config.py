@@ -46,7 +46,6 @@ EMAIL_RE = (
 IPV4_RE = r"(?:(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(?:25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)"
 
 STOP_WORDS = ("the", "be", "to", "of", "and", "that", "have", "with")  # gopher_quality_filter.py:11
-END_PUNCTUATION = (".", "?", "!", '"', "'")  # c4_filters.py:15
 FINEWEB_STOP_CHARS = (".", "'", '"', "!", "?")  # fineweb_quality_filter.py:32
 POLICY_SUBSTRINGS = (  # c4_filters.py:17-24
     "terms of use",
@@ -56,8 +55,6 @@ POLICY_SUBSTRINGS = (  # c4_filters.py:17-24
     "use of cookies",
     "use cookies",
 )
-
-MERSENNE_61 = (1 << 61) - 1  # minhash.py:26 uses the Mersenne prime 2^61-1
 
 
 @dataclass(frozen=True)
@@ -227,19 +224,6 @@ class MinHashConfig:
 
 
 @dataclass(frozen=True)
-class SimHashConfig:
-    bits: int = 60  # 60 not 64: value stays positive in a signed int64 in every engine
-    bands: int = 4
-    max_hamming: int = 3
-
-
-@dataclass(frozen=True)
-class WinnowingConfig:
-    k: int = 3  # gram size (tokens)
-    w: int = 4  # window: any shared run of >= w + k - 1 tokens is detected
-
-
-@dataclass(frozen=True)
 class URLFilterConfig:
     soft_word_threshold: int = 2
     blocked_domains: tuple[str, ...] = ()
@@ -258,7 +242,6 @@ class EngineConfig:
     unigram: UnigramLogProbConfig = field(default_factory=UnigramLogProbConfig)
     pii: PIIConfig = field(default_factory=PIIConfig)
     minhash: MinHashConfig = field(default_factory=MinHashConfig)
-    simhash: SimHashConfig = field(default_factory=SimHashConfig)
     url_filter: URLFilterConfig = field(default_factory=URLFilterConfig)
 
 

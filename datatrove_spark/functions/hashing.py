@@ -10,11 +10,12 @@ this engine standardizes on a *portable 60-bit hash*:
 - Python: int(hashlib.md5(s).hexdigest()[:15],16)
 - DuckDB: ('0x'||substr(md5(s),1,15))::bigint
 
-MinHash permutations follow the reference's universal-hash family
-(minhash.py:49-58): h_k(x) = (a_k*x + b_k) mod M61, with (a_k,b_k) derived
-deterministically from k via h60 so all engines agree. Products are computed
-in decimal(38,0) (Spark) / HUGEINT (DuckDB) / int (Python) to avoid int64
-overflow.
+MinHash permutations use the 31-bit universal-hash family
+h_k(x) = (a_k*(x mod M31) + b_k) mod M31, M31 = 2^31-1, with (a_k, b_k)
+derived deterministically from k via h60 so all engines agree. Every product
+stays below 2^62, so the Python/numpy kernel and the DuckDB oracle compute it
+in plain int64. The reference's default family is the 64-bit one over
+2^61-1 (minhash.py:49-58).
 """
 
 from __future__ import annotations
@@ -23,11 +24,6 @@ import hashlib
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from datatrove_spark.config import MERSENNE_61
-
-HASH_BITS = 60
-HASH_MAX = 1 << HASH_BITS
 
 
 def py_hash60(s: str) -> int:
@@ -47,19 +43,6 @@ def sql_hash60(expr: str) -> str:
 MERSENNE_31 = (1 << 31) - 1
 
 
-def py_hash32(s: str) -> int:
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-
-
-def hash32(c: Column) -> Column:
-    """Spark column: portable 32-bit hash (first 8 md5 hex digits)."""
-    return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("long")
-
-
-def sql_hash32(expr: str) -> str:
-    return f"(('0x' || substr(md5({expr}), 1, 8))::BIGINT)"
-
-
 def perm31_coeffs(k: int) -> tuple[int, int]:
     """(a, b) for the 31-bit universal-hash family: a in [1, M31), b in
     [0, M31). With inputs reduced mod M31, a*h + b < 2^62 fits a signed
@@ -71,32 +54,6 @@ def perm31_coeffs(k: int) -> tuple[int, int]:
     return a, b
 
 
-def perm31_hash(h: Column, k: int) -> Column:
-    """Spark: (a_k * (h mod M31) + b_k) mod M31 — all int64 ops."""
-    a, b = perm31_coeffs(k)
-    return (F.pmod(h, F.lit(MERSENNE_31)) * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_31)
-
-
 def sql_perm31_hash(h_expr: str, k: int) -> str:
     a, b = perm31_coeffs(k)
     return f"((({h_expr}) % {MERSENNE_31}) * {a} + {b}) % {MERSENNE_31}"
-
-
-def perm_coeffs(k: int) -> tuple[int, int]:
-    """Deterministic (a, b) for permutation k: a in [1, M61), b in [0, M61)."""
-    a = py_hash60(f"minhash_a_{k}") % (MERSENNE_61 - 1) + 1
-    b = py_hash60(f"minhash_b_{k}") % MERSENNE_61
-    return a, b
-
-
-def perm_hash(h: Column, k: int) -> Column:
-    """Spark: (a_k * h + b_k) mod M61 computed exactly via decimal(38,0)."""
-    a, b = perm_coeffs(k)
-    prod = h.cast("decimal(38,0)") * F.lit(a).cast("decimal(38,0)") + F.lit(b).cast("decimal(38,0)")
-    return (prod % F.lit(MERSENNE_61).cast("decimal(38,0)")).cast("long")
-
-
-def sql_perm_hash(h_expr: str, k: int) -> str:
-    """DuckDB SQL fragment for the same permuted hash (HUGEINT arithmetic)."""
-    a, b = perm_coeffs(k)
-    return f"((({h_expr})::HUGEINT * {a}::HUGEINT + {b}::HUGEINT) % {MERSENNE_61}::HUGEINT)::BIGINT"

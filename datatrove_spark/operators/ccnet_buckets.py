@@ -6,8 +6,8 @@ and split them into k equal tiles; "head" (most fluent third) feeds model
 training directly, "middle"/"tail" are kept for mining or dropped. The
 reference library has no LM bucketing stage (its nearest analog is the
 threshold-only UnigramLogProbFilter); this completes the quality-scoring
-family: threshold filters (gopher/c4/fineweb/unigram/ngram_lm) + DSIR
-importance weights + CCNet tiles.
+family: threshold filters (gopher/c4/fineweb/unigram/ngram_lm) + CCNet
+tiles.
 
 Spark shape — EXACT ntile without a per-language sort task: the textbook
 rendering `ntile(k) OVER (PARTITION BY lang ORDER BY ppl)` plans one window
@@ -43,8 +43,6 @@ from datatrove_spark.operators import ngram_lm
 from datatrove_spark.operators.ngram_lm import NgramLMConfig
 
 NAME = "ccnet"
-
-_TILE_NAMES_3 = {1: "head", 2: "middle", 3: "tail"}
 
 
 def sql_tile(rank: int, n: int, k: int) -> int:

@@ -37,7 +37,6 @@ from datatrove_spark.config import GopherRepetitionConfig
 
 NAME = "gopher_repetition"
 
-_PY_STRIP = " \t\n\r\x0b\x0c"
 _SQL_STRIP = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
 
 

@@ -47,9 +47,8 @@ def threshold_map_expr(key, thr_by_key: dict) -> "F.Column":
     One flat CreateMap node with 2K children instead of a chained
     when().otherwise() — the chain nests one tree level per key, and
     Catalyst's recursive tree transforms overflow the JVM stack near ~400
-    keys (measured: cell_rebalance at 400 k-means cells died in
-    withColumn during analysis). Missing keys yield NULL, the same
-    fallthrough the when-chain had."""
+    keys (measured: a 400-key chain died in withColumn during analysis).
+    Missing keys yield NULL, the same fallthrough the when-chain had."""
     pairs = []
     for k in sorted(thr_by_key):
         pairs.append(F.lit(k))

@@ -14,7 +14,7 @@ similarity); required engine capability for embedding-based curation:
                 100 TB path: the corpus is bucketed once (write-side), a
                 query touches only its candidate buckets.
 - neardup_pairs embedding near-duplicate pairs: cosine >= threshold,
-                connected-components dedup like minhash/simhash.
+                connected-components dedup like minhash.
 
 Float determinism: dot products fold strictly left-to-right via
 zip_with+aggregate (Spark) and an index-range fold (DuckDB); inputs are
@@ -468,7 +468,7 @@ def semdedup(
     — cluster embeddings into k cells, compute pairwise cosine only WITHIN
     each cell, and keep one representative per group of semantically
     duplicate vectors. Beyond-reference (datatrove has no embedding ops);
-    completes the dedup taxonomy's semantic tier above exact/minhash/simhash.
+    completes the dedup taxonomy's semantic tier above exact/minhash.
 
     Spark shape: one Arrow kernel pass assigns cells (coarse centroids = the
     n_centroids lowest-id vectors, the same deterministic stand-in for the

@@ -73,8 +73,8 @@ def reason(url_col: Column, cfg: URLFilterConfig) -> Column:
     if cfg.banned_subwords:
         # single literal-alternation regex: an OR-fold of contains() nests
         # one expression level per pattern and overflows the JVM analyzer
-        # stack near ~400 patterns (same class as the cell_rebalance
-        # threshold chain); one regexp node is flat at any list size and
+        # stack near ~400 patterns (same class as a chained per-key
+        # threshold lookup); one regexp node is flat at any list size and
         # stays JVM-side (an interpreted exists() lambda would not)
         alt = "|".join(_quote_re(s) for s in cfg.banned_subwords)
         checks.append((norm.rlike(alt), "blacklisted_subword"))

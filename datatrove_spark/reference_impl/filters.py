@@ -15,7 +15,6 @@ semantics (config.py TOKENIZER NOTE). They serve double duty:
 
 from __future__ import annotations
 
-import math
 import re
 from collections import Counter
 
@@ -30,7 +29,6 @@ from datatrove_spark.config import (
     GopherRepetitionConfig,
     POLICY_SUBSTRINGS,
     TOKEN_RE,
-    UnigramLogProbConfig,
     WORD_RE,
 )
 
@@ -479,18 +477,6 @@ def fineweb_quality(
     if _ratio_gt(text.count("\n"), len(ws), cfg.new_line_ratio):
         return "list_ratio"
     return None
-
-
-def unigram_log_prob(
-    text: str,
-    freqs: dict[str, float],
-    cfg: UnigramLogProbConfig = UnigramLogProbConfig(),
-) -> float:
-    """Mean ln P(word); provenance: unigram_log_probs.py:62-68."""
-    ws = words(text)
-    if not ws:
-        return 0.0
-    return sum(math.log(freqs.get(w.lower(), cfg.unknown_freq)) for w in ws) / len(ws)
 
 
 def c4_paragraphs(text: str, cfg: C4ParagraphConfig = C4ParagraphConfig()) -> str | None:

@@ -34,7 +34,6 @@ from datatrove_spark.operators import (
     ccnet_buckets,
     cell_rebalance,
     decont,
-    dsir,
     exact_dedup,
     exact_substrings,
     extract,
@@ -54,13 +53,11 @@ from datatrove_spark.operators import (
     sampling,
     sentence_dedup,
     tokenizer,
-    simhash,
     similarity,
     token_stats,
     unigram_logprob,
     url_dedup,
     url_filter,
-    winnowing,
 )
 from datatrove_spark.plans.pipeline import Stage, canonical_stages, compose
 
@@ -387,15 +384,6 @@ def _q_sentence_index_dedup_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "sentence_dedup_text", "sentence_dedup_keep")
 
 
-def _q_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return simhash.fingerprints(load(spark, sf_dir, "documents"))
-
-
-def _q_simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = simhash.apply(load(spark, sf_dir, "documents"))
-    return df.select("doc_id", "dup_of", "simhash_keep")
-
-
 def _q_decont(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     index = decont.build_index(docs.filter("doc_id < 25"))
@@ -690,22 +678,6 @@ def _q_host_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return host_stats.apply(df)
 
 
-def _q_dsir_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dsir.scores(load(spark, sf_dir, "documents"), target="lang = 'en'")
-
-
-def _q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dsir.select_topk(load(spark, sf_dir, "documents"), target="lang = 'en'", k=100)
-
-
-def _q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return winnowing.fingerprints(load(spark, sf_dir, "documents"))
-
-
-def _q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return winnowing.pairs(load(spark, sf_dir, "documents"))
-
-
 def _q_sentence_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = sentence_dedup.apply(load(spark, sf_dir, "documents"))
     return df.select("doc_id", "sentence_dedup_text", "sentence_dedup_keep")
@@ -785,18 +757,12 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
         _q_minhash_index_dedup_full,
         minhash.oracle_sql_index_dedup_full(_IDX_CORPUS_T, _IDX_SPLIT_T),
     ),
-    "simhash_fingerprints": (_q_simhash_fingerprints, simhash.oracle_sql_fingerprints()),
-    "simhash_dedup": (_q_simhash_dedup, simhash.oracle_sql_dedup()),
     "decont": (_q_decont, decont.oracle_sql()),
     "cosine_topk": (_q_cosine_topk, similarity.oracle_sql_cosine_topk()),
     "ann_topk": (_q_ann_topk, similarity.oracle_sql_ann_topk()),
     "ivf_topk": (_q_ivf_topk, similarity.oracle_sql_ivf_topk()),
     "embedding_neardup": (_q_embedding_neardup, similarity.oracle_sql_neardup_pairs(threshold=0.45)),
     "semdedup": (_q_semdedup, similarity.oracle_sql_semdedup(threshold=0.45)),
-    "dsir_scores": (_q_dsir_scores, dsir.oracle_sql_scores()),
-    "dsir_select": (_q_dsir_select, dsir.oracle_sql_topk()),
-    "winnow_fingerprints": (_q_winnow_fingerprints, winnowing.oracle_sql_fingerprints()),
-    "winnow_pairs": (_q_winnow_pairs, winnowing.oracle_sql_pairs()),
     "sentence_dedup": (_q_sentence_dedup, sentence_dedup.oracle_sql()),
     "sentence_index_dedup": (
         _q_sentence_index_dedup,

@@ -17,8 +17,8 @@ first-class engine capability here because a production crawl is a stream:
 Dedup in the stream is exactly the bounded-state form Spark provides:
 ``dedup_stream`` drops exact duplicates whose earlier copy arrived within
 the watermark horizon (dropDuplicatesWithinWatermark — per-key TTL state,
-evicted as event time passes). Corpus-WIDE near-dup (minhash/simhash
-joins over the full history) stays in periodic batch compaction — the
+evicted as event time passes). Corpus-WIDE near-dup (minhash joins over
+the full history) stays in periodic batch compaction — the
 lambda shape the reference's multi-job dedup also implies.
 """
 

@@ -1,6 +1,6 @@
 #!/usr/bin/env python
 """Scale evidence for the dedup family: wall time + per-op shuffle volumes
-at sf0.1 (50k docs) and an sf1-equivalent (x10 replicated, 500k docs).
+at sf0.1 (5k docs) and an sf1-equivalent (x10 replicated, 50k docs).
 
 Turns the "would survive 100x" plan audit into measured numbers: if shuffle
 bytes per input document stay ~constant from 1x to 10x while wall time grows
@@ -175,7 +175,6 @@ OPS = {
     "minhash_dedup": _op("minhash", ["doc_id", "dup_of", "minhash_keep"]),
     "minhash_index_dedup_full": lambda spark, docs: _index_full(docs),
     "sentence_dedup": lambda spark, docs: _sentence_dedup(docs),
-    "simhash_dedup": _op("simhash", ["doc_id", "dup_of", "simhash_keep"]),
     "exact_dedup": _op("exact_dedup", ["doc_id", "dup_of", "exact_dedup_keep"]),
     "bloom_dedup": _op("bloom_dedup", ["doc_id", "bloom_dup_frac", "bloom_dedup_keep"]),
     "exact_substrings": _op("exact_substrings", ["doc_id", "n_words", "n_removed", "es_text"]),

@@ -2,9 +2,10 @@
 
 The banned-subword rule used to be an OR-fold of contains() — one Catalyst
 tree level per pattern, JVM analyzer StackOverflowError near ~400 patterns
-(the same failure class the cell_rebalance scale ladder caught for chained
-per-cell thresholds). These pin (a) literal-only matching incl. regex
-metacharacters, and (b) that a 1,000-pattern list builds and evaluates."""
+(the same failure class as a when().otherwise() chain of per-key
+thresholds, see lang_rebalance.threshold_map_expr). These pin (a)
+literal-only matching incl. regex metacharacters, and (b) that a
+1,000-pattern list builds and evaluates."""
 
 from __future__ import annotations
 
