@@ -39,8 +39,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from datatrove_spark.config import C4BadWordsConfig
-from datatrove_spark.functions.hashing import hash60, sql_hash60
-from datatrove_spark.operators.sampling import SAMPLE_M
+from datatrove_spark.functions.hashing import sql_hash60
+from datatrove_spark.operators.sampling import SAMPLE_M, sample_bucket
 
 NAME = "c4_badwords"
 
@@ -104,8 +104,7 @@ def columns(
         known = known | is_lang
         matched = matched | (is_lang & low.rlike(_pattern(lg, ws)))
     kept_by_fraction = (
-        F.pmod(hash60(F.concat(F.lit(cfg.seed_salt), keep_fraction_key.cast("string"))), F.lit(SAMPLE_M))
-        < int(cfg.keep_fraction * SAMPLE_M)
+        sample_bucket(cfg.seed_salt, keep_fraction_key) < int(cfg.keep_fraction * SAMPLE_M)
         if cfg.keep_fraction > 0.0
         else F.lit(False)
     )

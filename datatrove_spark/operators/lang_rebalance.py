@@ -13,8 +13,9 @@ q_l = n_l^alpha / Σ n^alpha and a total budget B = budget_frac·N docs, each
 language keeps at rate r_l = min(1, B·q_l / n_l) — expected kept counts
 follow the temperature distribution, capped at keeping everything for
 languages below their target. The keep decision reuses the engine's
-deterministic sampler rule (h60(salt|id) mod 1e6 < floor(r_l·1e6)):
-partition-independent, identical sample at any parallelism, SQL-exact.
+deterministic sampler rule (sampling.sample_bucket: h60(salt|id) mod 1e6 <
+floor(r_l·1e6)): partition-independent, identical sample at any
+parallelism, SQL-exact.
 
 Spark shape: ONE tiny aggregation (per-language counts, map-side combined,
 collected — O(languages) rows) computes the rates driver-side; the keep
@@ -35,10 +36,10 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datatrove_spark.functions.hashing import hash60, sql_hash60
+from datatrove_spark.functions.hashing import sql_hash60
+from datatrove_spark.operators.sampling import SAMPLE_M, sample_bucket
 
 NAME = "lang_rebalance"
-SAMPLE_M = 1_000_000
 
 
 def threshold_map_expr(key, thr_by_key: dict) -> "F.Column":
@@ -48,7 +49,7 @@ def threshold_map_expr(key, thr_by_key: dict) -> "F.Column":
     when().otherwise() — the chain nests one tree level per key, and
     Catalyst's recursive tree transforms overflow the JVM stack near ~400
     keys (measured: a 400-key chain died in withColumn during analysis).
-    Missing keys yield NULL, the same fallthrough the when-chain had."""
+    Missing keys yield NULL."""
     pairs = []
     for k in sorted(thr_by_key):
         pairs.append(F.lit(k))
@@ -98,7 +99,7 @@ def apply(
     thr = threshold_map_expr(
         F.col(lang_col), {lg: int(r * SAMPLE_M) for lg, r in rates.items()}
     )
-    h = F.pmod(hash60(F.concat(F.lit(salt), F.col(id_col).cast("string"))), F.lit(SAMPLE_M))
+    h = sample_bucket(salt, F.col(id_col))
     return df.withColumn(f"{NAME}_thr", thr).withColumn(f"{NAME}_keep", h < F.col(f"{NAME}_thr"))
 
 

@@ -29,12 +29,16 @@ from datatrove_spark.functions.hashing import hash60, sql_hash60
 SAMPLE_M = 1_000_000
 
 
+def sample_bucket(salt: str, key: Column) -> Column:
+    """h60(salt|key) mod SAMPLE_M: the deterministic sampler's bucket. A row
+    is kept at rate r iff its bucket < int(r * SAMPLE_M); c4_badwords'
+    keep_fraction and lang_rebalance use the same rule."""
+    return F.pmod(hash60(F.concat(F.lit(salt), key.cast("string"))), F.lit(SAMPLE_M))
+
+
 def deterministic_sample(df: DataFrame, rate: float, key_col: str, salt: str = "") -> DataFrame:
     """Keep iff h60(salt|key) mod 1e6 < rate*1e6 — partition-independent."""
-    keep = F.pmod(hash60(F.concat(F.lit(salt), F.col(key_col).cast("string"))), F.lit(SAMPLE_M)) < int(
-        rate * SAMPLE_M
-    )
-    return df.filter(keep)
+    return df.filter(sample_bucket(salt, F.col(key_col)) < int(rate * SAMPLE_M))
 
 
 def oracle_sql_sample(table: str, rate: float, key_expr: str, salt: str = "") -> str:

@@ -32,7 +32,6 @@ from datatrove_spark.operators import (
     c4_paragraphs,
     c4_quality,
     ccnet_buckets,
-    cell_rebalance,
     decont,
     exact_dedup,
     exact_substrings,
@@ -42,7 +41,6 @@ from datatrove_spark.operators import (
     gopher_quality,
     gopher_repetition,
     host_stats,
-    kmeans,
     lang_rebalance,
     langid,
     minhash,
@@ -619,15 +617,6 @@ def _q_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("doc_id", "lang", "lang_rebalance_thr", "lang_rebalance_keep")
 
 
-def _q_kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return kmeans.apply(load(spark, sf_dir, "embeddings"), k=16, n_iter=2)
-
-
-def _q_cell_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    df = cell_rebalance.apply(load(spark, sf_dir, "embeddings"))
-    return df.select("vec_id", "cell", "cell_rebalance_thr", "cell_rebalance_keep")
-
-
 def _q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = ccnet_buckets.apply(load(spark, sf_dir, "documents"))
     return df.select("doc_id", "lang", "ngram_perplexity", "ccnet_tile", "ccnet_bucket")
@@ -727,8 +716,6 @@ REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]]
     "ngram_perplexity": (_q_ngram_perplexity, ngram_lm.oracle_sql()),
     "ccnet_buckets": (_q_ccnet_buckets, ccnet_buckets.oracle_sql()),
     "lang_rebalance": (_q_lang_rebalance, lang_rebalance.oracle_sql()),
-    "cell_rebalance": (_q_cell_rebalance, cell_rebalance.oracle_sql()),
-    "kmeans_cells": (_q_kmeans_cells, kmeans.oracle_sql(k=16, n_iter=2)),
     "token_count": (_q_token_count, token_stats.oracle_sql_doc_tokens()),
     "token_stats_by_lang": (_q_token_stats_by_lang, token_stats.oracle_sql_group_stats()),
     "length_histogram": (_q_length_histogram, token_stats.oracle_sql_length_histogram()),

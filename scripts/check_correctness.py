@@ -1,7 +1,8 @@
 #!/usr/bin/env python
 """Driver-shaped correctness check: run every registry entry and compare it
 with its oracle_sql() via DuckDB at sf0.01 (or $SPARK_GRAFT_SF_DIR), the way
-the driver does: ``registry.check`` takes the Spark ``toPandas()`` frame and
+the driver does. sf0.01 is a second 500-doc sample, the same size as sf0.001,
+not a larger scale. ``registry.check`` takes the Spark ``toPandas()`` frame and
 the DuckDB ``.df()`` frame and requires the same columns, the same pandas
 dtypes and the same hash of the cell reprs, in any row or column order.
 

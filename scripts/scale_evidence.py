@@ -134,28 +134,6 @@ def _neardup(spark, emb):
     return similarity.neardup_pairs(emb, threshold=0.9, n_blocks=max(8, n // 2500))
 
 
-def _cell_rebalance(spark, emb):
-    from datatrove_spark.operators import cell_rebalance
-
-    # k scales as n/1000 like the other cell ops; expected ladder shape is
-    # near-zero B/doc (the only shuffle is the O(cells) count agg — the
-    # corpus-side keep rule is a narrow literal-threshold filter)
-    n = emb.count()
-    return cell_rebalance.apply(emb, n_centroids=max(16, n // 1000))
-
-
-def _kmeans(spark, emb):
-    from datatrove_spark.operators import kmeans
-
-    # k scales as n/1000 like the other cell ops. Expected ladder shape:
-    # B/doc FALLING — the corpus never shuffles (per-partition int64 partial
-    # sums), so the only shuffle is O(partitions x k x dim) slim rows per
-    # iteration, independent of n. Assignment flops are O(n*k*d) per pass
-    # (same honest wall term as semdedup's, the GPU step on a real cluster).
-    n = emb.count()
-    return kmeans.apply(emb, k=max(16, n // 1000), n_iter=2)
-
-
 def _ivf(spark, emb):
     from datatrove_spark.operators import similarity
 
@@ -182,10 +160,8 @@ OPS = {
     "semdedup": _semdedup,
     "embedding_neardup": _neardup,
     "ivf_topk": _ivf,
-    "cell_rebalance": _cell_rebalance,
-    "kmeans_cells": _kmeans,
 }
-EMB_OPS = {"semdedup", "embedding_neardup", "ivf_topk", "cell_rebalance", "kmeans_cells"}
+EMB_OPS = {"semdedup", "embedding_neardup", "ivf_topk"}
 
 
 def _index_full(docs):

@@ -6,6 +6,8 @@ from datatrove_spark.registry import duck_connect
 from datatrove_spark.session import get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
+# Not a larger scale: sf0.01 is a second 500-doc sample (the same doc_ids
+# 0-499 with other texts) and 500 embeddings, the same size as sf0.001.
 SF_MEDIUM = "/root/testdata/sf0.01"
 
 

@@ -71,6 +71,23 @@ def test_null_lang_fails_fast(spark):
         lang_rebalance.apply(nulled)
 
 
+def test_empty_corpus(spark):
+    """An empty corpus gives 0 rows with the 4-column schema, on the Spark
+    side and in the DuckDB oracle alike."""
+    import duckdb
+
+    cols = ["doc_id", "lang", "lang_rebalance_thr", "lang_rebalance_keep"]
+    out = lang_rebalance.apply(spark.createDataFrame([], "doc_id long, lang string"))
+    assert out.columns == cols
+    assert out.count() == 0
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, lang VARCHAR)")
+    cur = con.execute(lang_rebalance.oracle_sql())
+    assert [d[0] for d in cur.description] == cols
+    assert cur.fetchall() == []
+
+
 def test_non_sqrt_temperature_alpha03(spark):
     """alpha=0.3 (a non-sqrt temperature, libm pow path): realized keep rates
     must match the q_l ∝ n_l^alpha expectation within sampler granularity,

@@ -27,6 +27,7 @@ def test_oracle_parity_small(spark, duck_small, name):
 
 @pytest.mark.parametrize("name", NAMES)
 def test_oracle_parity_medium(spark, duck_medium, name):
+    """The same check on sf0.01, a second 500-doc sample of equal size."""
     run_compare(spark, duck_medium, name, SF_MEDIUM)
 
 
