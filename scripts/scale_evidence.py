@@ -26,6 +26,7 @@ import argparse
 import json
 import os
 import sys
+import tempfile
 import time
 import urllib.request
 
@@ -38,8 +39,8 @@ from pyspark.sql import functions as F  # noqa: E402
 from datatrove_spark import get_spark  # noqa: E402
 
 
-def corpus_path(spark, mult: int) -> str:
-    path = f"/tmp/scale_docs_{mult}x.parquet"
+def corpus_path(spark, mult: int, tmp: str) -> str:
+    path = os.path.join(tmp, f"docs_{mult}x.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
         reps = spark.range(mult).withColumnRenamed("id", "rep")
@@ -51,8 +52,8 @@ def corpus_path(spark, mult: int) -> str:
     return path
 
 
-def emb_path(spark, mult: int) -> str:
-    path = f"/tmp/scale_emb_{mult}x.parquet"
+def emb_path(spark, mult: int, tmp: str) -> str:
+    path = os.path.join(tmp, f"emb_{mult}x.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
         reps = spark.range(mult).withColumnRenamed("id", "rep")
@@ -183,44 +184,47 @@ def main() -> int:
 
     spark = get_spark(app_name="scale-evidence")
     results: dict[str, dict] = {}
-    for op in args.ops.split(","):  # spin up JVM + Arrow python workers
-        src = emb_path(spark, 1) if op in EMB_OPS else corpus_path(spark, 1)
-        warm = spark.read.parquet(src).limit(200)
-        OPS[op](spark, warm).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-    for mult in [int(m) for m in args.mults.split(",")]:
-        for op in args.ops.split(","):
-            src = emb_path(spark, mult) if op in EMB_OPS else corpus_path(spark, mult)
-            docs = spark.read.parquet(src)
-            n_docs = docs.count()
+    # the replicated corpora live for this run only: a cache that outlived
+    # it would be read again after the test data changed
+    with tempfile.TemporaryDirectory(prefix="scale_evidence_") as tmp:
+        for op in args.ops.split(","):  # spin up JVM + Arrow python workers
+            src = emb_path(spark, 1, tmp) if op in EMB_OPS else corpus_path(spark, 1, tmp)
+            warm = spark.read.parquet(src).limit(200)
+            OPS[op](spark, warm).write.format("noop").mode("overwrite").save()
             spark.catalog.clearCache()
-            before = stage_metrics(spark)
-            t0 = time.monotonic()
-            out = OPS[op](spark, docs)
-            out.write.format("noop").mode("overwrite").save()
-            wall = time.monotonic() - t0
-            time.sleep(2)  # let the UI store settle
-            after = stage_metrics(spark)
-            new = {k: v for k, v in after.items() if k not in before}
-            rec = {
-                "mult": mult,
-                "docs": n_docs,
-                "wall_s": round(wall, 2),
-                "docs_per_sec": round(n_docs / wall, 1),
-                "stages": len(new),
-                "shuffle_write_mb": round(sum(v["shuffle_write"] for v in new.values()) / 2**20, 1),
-                "shuffle_read_mb": round(sum(v["shuffle_read"] for v in new.values()) / 2**20, 1),
-                "input_mb": round(sum(v["input"] for v in new.values()) / 2**20, 1),
-            }
-            rec["shuffle_write_bytes_per_doc"] = round(
-                sum(v["shuffle_write"] for v in new.values()) / n_docs, 1
-            )
-            results[f"{op}@{mult}x"] = rec
-            print(json.dumps({f"{op}@{mult}x": rec}), flush=True)
-            # write incrementally: a killed/timed-out run keeps every
-            # completed record instead of losing the whole ladder
-            with open(args.out, "w") as f:
-                json.dump(results, f, indent=2)
+        for mult in [int(m) for m in args.mults.split(",")]:
+            for op in args.ops.split(","):
+                src = emb_path(spark, mult, tmp) if op in EMB_OPS else corpus_path(spark, mult, tmp)
+                docs = spark.read.parquet(src)
+                n_docs = docs.count()
+                spark.catalog.clearCache()
+                before = stage_metrics(spark)
+                t0 = time.monotonic()
+                out = OPS[op](spark, docs)
+                out.write.format("noop").mode("overwrite").save()
+                wall = time.monotonic() - t0
+                time.sleep(2)  # let the UI store settle
+                after = stage_metrics(spark)
+                new = {k: v for k, v in after.items() if k not in before}
+                rec = {
+                    "mult": mult,
+                    "docs": n_docs,
+                    "wall_s": round(wall, 2),
+                    "docs_per_sec": round(n_docs / wall, 1),
+                    "stages": len(new),
+                    "shuffle_write_mb": round(sum(v["shuffle_write"] for v in new.values()) / 2**20, 1),
+                    "shuffle_read_mb": round(sum(v["shuffle_read"] for v in new.values()) / 2**20, 1),
+                    "input_mb": round(sum(v["input"] for v in new.values()) / 2**20, 1),
+                }
+                rec["shuffle_write_bytes_per_doc"] = round(
+                    sum(v["shuffle_write"] for v in new.values()) / n_docs, 1
+                )
+                results[f"{op}@{mult}x"] = rec
+                print(json.dumps({f"{op}@{mult}x": rec}), flush=True)
+                # write incrementally: a killed/timed-out run keeps every
+                # completed record instead of losing the whole ladder
+                with open(args.out, "w") as f:
+                    json.dump(results, f, indent=2)
     print(f"wrote {args.out}")
     return 0
 

@@ -1,6 +1,9 @@
 """End-to-end deploy path (north rule: "run via spark-submit --py-files"):
 zip the package, launch the real spark-submit binary, check the curated
-output and metrics land. Slowish (fresh JVM) — one test, small input."""
+output and metrics land. Slowish (fresh JVM) — one test, small input.
+
+spark-submit runs from a directory outside the repository, so neither the
+driver nor a worker can import anything through the working directory."""
 
 from __future__ import annotations
 
@@ -42,6 +45,7 @@ def test_spark_submit_pyfiles(tmp_path):
         capture_output=True,
         text=True,
         env=env,
+        cwd=str(tmp_path),
         timeout=420,
     )
     assert r.returncode == 0, r.stderr[-3000:]
