@@ -7,7 +7,10 @@ Two workloads:
 1. every __spark_entry__.queries() entry at $SPARK_GRAFT_SF_DIR
    (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (unset: one
    slot per core of this process's CPU affinity);
-2. the flagship quality pipeline over a deterministically generated
+2. the north-rule curation flow (`plans.pipeline.compose` +
+   `canonical_stages()`: URL filter -> langid -> quality battery -> PII,
+   written by `run_pipeline` into its keep/removed parquet sink and its
+   metrics, under a temporary directory) over a deterministically generated
    Common-Crawl-style `pages` table (input_hint shape) — the throughput
    (docs/sec) headline: one warm-up run, then one timed run. 1M docs
    regardless of sf (override BENCH_PAGES_DOCS).
@@ -32,6 +35,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -62,12 +66,15 @@ def pages_path(spark, n_docs: int) -> str:
 
 
 def pages_pipeline_run(spark, n_docs: int) -> tuple[float, int]:
-    from datatrove_spark.registry import quality_pipeline
+    """Seconds to run the canonical curation flow over the pages table into
+    run_pipeline's dual sink (write + metrics rescan), and the kept count."""
+    from datatrove_spark.plans.pipeline import canonical_stages, run_pipeline
 
     pages = spark.read.parquet(pages_path(spark, n_docs))
-    t0 = time.perf_counter()
-    n = quality_pipeline(pages).filter("keep").count()
-    return time.perf_counter() - t0, n
+    with tempfile.TemporaryDirectory(prefix="bench_curate_") as out_dir:
+        t0 = time.perf_counter()
+        metrics = run_pipeline(spark, pages, canonical_stages(), out_dir, resume=False)
+        return time.perf_counter() - t0, metrics["kept"]
 
 
 def main() -> None:

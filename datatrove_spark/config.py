@@ -19,10 +19,12 @@ TOKENIZER NOTE (documented deviation): the reference tokenizes words with
 NLTK punkt (src/datatrove/utils/word_tokenizers.py:219). NLTK is not
 available in this environment, so the engine defines its word tokenizer as
 whitespace tokens: words = regexp matches of \\S+. All three implementations
-(Spark, Python oracle, SQL oracle) share this definition, so keep/drop parity
-is exact against the engine's own labels; absolute agreement with
-punkt-tokenized datatrove on edge docs may differ, which the F1 target
-tolerates (thresholded ratio rules are tokenizer-robust).
+(Spark, Python oracle, SQL oracle) share this definition (up to the
+dialects' \\s: Python's is every str.isspace() character, Java's and RE2's
+only ASCII whitespace; see PY_WORD_RE2), so keep/drop parity is exact
+against the engine's own labels; absolute agreement with punkt-tokenized
+datatrove on edge docs may differ, which the F1 target tolerates
+(thresholded ratio rules are tokenizer-robust).
 """
 
 from __future__ import annotations
@@ -32,6 +34,14 @@ from dataclasses import dataclass, field
 # Shared regexes (RE2-compatible: no lookarounds/backrefs, so the exact same
 # pattern runs in Java (Spark), Python re, and DuckDB RE2).
 WORD_RE = r"\S+"
+# The Python kernels' words (WORD_RE under Python's \s, i.e. str.split())
+# in RE2 syntax, for DuckDB oracles of kernels that compare word lists:
+# RE2's \s is only [\t\n\f\r ], so its \S+ keeps \x0b, \x1c-\x1f, \x85,
+# \xa0 and the Unicode spaces inside words.
+PY_WORD_RE2 = (
+    r"[^\t\n\x0b\x0c\r\x1c-\x20\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
 CITATION_RE = r"\[\d*\]|\[edit\]|\[citation needed\]"  # c4_filters.py:14
 # token-count regex, BPE-ish granularity (letters / digit runs / symbol runs)
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"

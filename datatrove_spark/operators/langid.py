@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from datatrove_spark.config import LangIdConfig
+from datatrove_spark.config import PY_WORD_RE2, LangIdConfig
 
 NAME = "langid"
 
@@ -103,30 +103,35 @@ _THAI = _re.compile(THAI_RE)
 _HANGUL = _re.compile(HANGUL_RE)
 _KANA = _re.compile(KANA_RE)
 _HAN = _re.compile(HAN_RE)
-_WS_RE = _re.compile(r"\S+")
 
 
 def py_langid(text: str | None) -> tuple[str, float | None]:
     """(language, UNROUNDED score) — one token pass over an inverted
     word->languages index. NULL text is an empty document. Score None
     mirrors the oracle's NULL (no words / NULL / empty text, where the SQL
-    divisions return NULL)."""
+    divisions return NULL).
+
+    Two exact fast paths. The four script classes are all non-ASCII, so
+    on ASCII text every script fraction is 0, no override can fire, and the
+    four scans are skipped. The words are ``str.split()``, which is
+    Python's ``\\S+`` findall (see ``reference_impl.filters.words``)."""
     if not text:
         return "und", None
-    n_chars = len(text)
-    tf = len(_THAI.findall(text)) / n_chars
-    if tf > SCRIPT_FRAC_THRESHOLD:
-        return "th", tf
-    hf = len(_HANGUL.findall(text)) / n_chars
-    if hf > SCRIPT_FRAC_THRESHOLD:
-        return "ko", hf
-    kf = len(_KANA.findall(text)) / n_chars
-    if kf > SCRIPT_FRAC_THRESHOLD:
-        return "ja", kf
-    cf = len(_HAN.findall(text)) / n_chars
-    if cf > SCRIPT_FRAC_THRESHOLD:
-        return "zh", cf
-    ws = _WS_RE.findall(text.lower())
+    if not text.isascii():
+        n_chars = len(text)
+        tf = len(_THAI.findall(text)) / n_chars
+        if tf > SCRIPT_FRAC_THRESHOLD:
+            return "th", tf
+        hf = len(_HANGUL.findall(text)) / n_chars
+        if hf > SCRIPT_FRAC_THRESHOLD:
+            return "ko", hf
+        kf = len(_KANA.findall(text)) / n_chars
+        if kf > SCRIPT_FRAC_THRESHOLD:
+            return "ja", kf
+        cf = len(_HAN.findall(text)) / n_chars
+        if cf > SCRIPT_FRAC_THRESHOLD:
+            return "zh", cf
+    ws = text.lower().split()
     if not ws:
         return "und", None
     counts: dict[str, int] = {}
@@ -199,8 +204,8 @@ def oracle_sql(
     return f"""
 WITH base AS (
   SELECT {id_col} AS id,
-         regexp_extract_all(lower({text_col}), '\\S+') AS ws,
-         len(regexp_extract_all(lower({text_col}), '\\S+')) AS n_words,
+         regexp_extract_all(lower({text_col}), '{PY_WORD_RE2}') AS ws,
+         len(regexp_extract_all(lower({text_col}), '{PY_WORD_RE2}')) AS n_words,
          {sql_frac(THAI_RE)} AS thai_f,
          {sql_frac(HANGUL_RE)} AS hangul_f,
          {sql_frac(KANA_RE)} AS kana_f,

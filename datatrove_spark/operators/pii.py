@@ -35,6 +35,9 @@ NAME = "pii"
 
 _EMAIL = re.compile(EMAIL_RE)
 _IPV4 = re.compile(IPV4_RE)
+# every IPV4_RE match contains a digit, a dot and a digit: each octet
+# alternative starts and ends with a digit
+_IPV4_HINT = re.compile(r"[0-9]\.[0-9]")
 
 
 def _is_public(m: str) -> bool:
@@ -46,9 +49,15 @@ def _is_public(m: str) -> bool:
 
 def scrub(text: str, cfg: PIIConfig = PIIConfig()) -> str:
     """Pure-Python per-document kernel (shared by the pandas UDF and tests).
-    NULL text = empty document."""
+    NULL text = empty document.
+
+    Each substitution runs only on text where it could match, which keeps
+    the output exact: every EMAIL_RE match contains a literal ``@``, so the
+    email pass runs only when ``"@" in text``; every IPV4_RE match contains
+    a digit, a dot and a digit (each octet starts and ends with a digit),
+    so the IPv4 pass runs only when the email-scrubbed text has one."""
     text = text or ""
-    if cfg.remove_emails:
+    if cfg.remove_emails and "@" in text:
         i = 0
 
         def esub(mo: re.Match) -> str:
@@ -58,7 +67,7 @@ def scrub(text: str, cfg: PIIConfig = PIIConfig()) -> str:
             return r
 
         text = _EMAIL.sub(esub, text)
-    if cfg.remove_ips:
+    if cfg.remove_ips and _IPV4_HINT.search(text):
         j = 0
 
         def isub(mo: re.Match) -> str:
@@ -168,7 +177,7 @@ def oracle_sql(
     text_expr: str = "text",
     cfg: PIIConfig = PIIConfig(),
 ) -> str:
-    steps = f"SELECT {id_col}, {text_expr} AS t0 FROM {table}"
+    steps = f"SELECT {id_col}, coalesce({text_expr}, '') AS t0 FROM {table}"
     cur = "t0"
     if cfg.remove_emails:
         steps = f"SELECT {id_col}, {_sql_scrub_emails(cur, cfg)} AS t1 FROM ({steps})"

@@ -29,10 +29,8 @@ from datatrove_spark.config import (
     GopherRepetitionConfig,
     POLICY_SUBSTRINGS,
     TOKEN_RE,
-    WORD_RE,
 )
 
-_WORD_RE = re.compile(WORD_RE)
 _ALNUM_RE = re.compile("[A-Za-z0-9]")
 _ALPHA_RE = re.compile("[A-Za-z]")
 _CITATION_RE = re.compile(CITATION_RE)
@@ -41,7 +39,14 @@ _SENT_RE = re.compile(r"[^.!?]+[.!?]+")
 
 
 def words(text: str | None) -> list[str]:
-    return _WORD_RE.findall(text or "")
+    """The engine's words (config.WORD_RE, maximal runs of non-``\\s``
+    characters) of `text`; NULL text has none. ``str.split()`` is
+    Python's ``\\S+`` findall exactly: for ``str`` patterns ``\\s`` matches
+    the characters for which ``str.isspace()`` is true, and ``split()``
+    with no separator splits on runs of those and drops empty strings.
+    tests/test_kernel_fast_paths.py checks every code point. Java's and
+    RE2's ``\\s`` are narrower sets, so this equivalence is Python's only."""
+    return (text or "").split()
 
 
 def simplify_text(text: str) -> str:

@@ -25,6 +25,8 @@ from datatrove_spark.operators import (
     fineweb_quality,
     gopher_quality,
     gopher_repetition,
+    langid,
+    pii,
 )
 from datatrove_spark.reference_impl import filters as ref
 from tests.conftest import assert_matches_oracle, duck_documents
@@ -110,6 +112,14 @@ def test_fuzz_c4_quality(fuzz_oracle):
 
 def test_fuzz_fineweb_quality(fuzz_oracle):
     assert_matches_oracle(fineweb_quality, *fuzz_oracle)
+
+
+def test_fuzz_langid(fuzz_oracle):
+    assert_matches_oracle(langid, *fuzz_oracle)
+
+
+def test_fuzz_pii(fuzz_oracle):
+    assert_matches_oracle(pii, *fuzz_oracle)
 
 
 def test_fuzz_c4_paragraphs(fuzz):

@@ -1,6 +1,8 @@
 """Python workers of a local session import PySpark from site-packages, so no
 zipimporter of Spark's archives is left for `importlib.invalidate_caches()`
-to re-read at every task's set-up (`pyspark_site_daemon`)."""
+to re-read at every task's set-up, and freeze their heap before their second
+task, so the daemon's `gc.collect()` after each task skips the imported
+modules (`pyspark_site_daemon`)."""
 
 from __future__ import annotations
 
@@ -61,3 +63,35 @@ def test_daemon_keeps_path_when_versions_differ(tmp_path):
     assert not sd.drop_spark_archives(path, cache)
     assert path == want_path
     assert cache == want_cache
+
+
+def test_worker_freezes_its_heap_from_its_second_task(spark):
+    """Each worker calls `gc.freeze()` before its second task, so the daemon's
+    `gc.collect()` after every task no longer walks the imported modules,
+    while a reference cycle made in one task is still collected before that
+    worker's next task."""
+
+    def probe(_):
+        import gc
+        import os
+        import sys
+        import weakref
+
+        class Node:  # weakly referenceable, and part of a reference cycle
+            def __init__(self, cycle: dict):
+                cycle["node"] = self
+                self.cycle = cycle
+
+        prev = getattr(sys, "_freeze_probe", None)
+        seq = getattr(sys, "_freeze_probe_seq", 0) + 1
+        sys._freeze_probe_seq = seq
+        sys._freeze_probe = weakref.ref(Node({}))
+        yield os.getpid(), seq, gc.get_freeze_count(), prev is not None and prev() is not None
+
+    rdd = spark.sparkContext.parallelize(range(4), 4)
+    rows = [r for _ in range(3) for r in rdd.mapPartitions(probe).collect()]
+    later = [r for r in rows if r[1] >= 2]
+    assert later, rows  # some worker ran more than one probe task
+    for pid, seq, frozen, prev_alive in later:
+        assert frozen > 0, (pid, seq)
+        assert not prev_alive, (pid, seq)
