@@ -11,9 +11,10 @@ Two workloads:
    `canonical_stages()`: URL filter -> langid -> quality battery -> PII,
    written by `run_pipeline` into its keep/removed parquet sink and its
    metrics, under a temporary directory) over a deterministically generated
-   Common-Crawl-style `pages` table (input_hint shape) — the throughput
-   (docs/sec) headline: one warm-up run, then one timed run. 1M docs
-   regardless of sf (override BENCH_PAGES_DOCS).
+   Common-Crawl-style `pages` table (input_hint shape), generated afresh
+   into a per-run temporary directory — the throughput (docs/sec)
+   headline: one warm-up run, then one timed run. 1M docs regardless of sf
+   (override BENCH_PAGES_DOCS).
 
 BENCH_SCALING=1 additionally re-runs workload 2 at two parallelism levels
 (default max(1, cpus/8) vs max(4, cpus/2): 1 vs 4 cores on a 4-core host;
@@ -54,30 +55,36 @@ def time_query(fn, spark, sf_dir) -> tuple[float, int]:
     return dt, df.count()
 
 
-def pages_path(spark, n_docs: int) -> str:
-    """Materialize the deterministic pages table once (generation untimed —
-    a real pipeline reads pages from storage)."""
+WARMUP_DOCS = 2000
+
+
+def pages_path(spark, root: str, n_docs: int) -> str:
+    """The deterministic pages table of `n_docs` under `root`, the run's
+    temporary directory, generated on first use (generation untimed — a
+    real pipeline reads pages from storage)."""
     from datatrove_spark.sources.pages import generate_pages
 
-    path = f"/tmp/bench_pages_{n_docs}.parquet"
+    path = os.path.join(root, f"pages_{n_docs}.parquet")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         generate_pages(spark, n_docs).write.mode("overwrite").parquet(path)
     return path
 
 
-def pages_pipeline_run(spark, n_docs: int) -> tuple[float, int]:
-    """Seconds to run the canonical curation flow over the pages table into
-    run_pipeline's dual sink (write + metrics rescan), and the kept count."""
+def pages_pipeline_run(spark, path: str) -> tuple[float, int]:
+    """Seconds to run the canonical curation flow over the pages table at
+    `path` into run_pipeline's dual sink (write + metrics rescan), and the
+    kept count."""
     from datatrove_spark.plans.pipeline import canonical_stages, run_pipeline
 
-    pages = spark.read.parquet(pages_path(spark, n_docs))
+    pages = spark.read.parquet(path)
     with tempfile.TemporaryDirectory(prefix="bench_curate_") as out_dir:
         t0 = time.perf_counter()
         metrics = run_pipeline(spark, pages, canonical_stages(), out_dir, resume=False)
         return time.perf_counter() - t0, metrics["kept"]
 
 
-def main() -> None:
+def main(root: str) -> None:
+    """The benchmark, with every generated pages table under `root`."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(sf_dir.rstrip("/").split("sf")[-1])
     n_pages = int(os.environ.get("BENCH_PAGES_DOCS", "1000000"))
@@ -86,9 +93,9 @@ def main() -> None:
     cpus = spark.sparkContext.defaultParallelism
     time_query(e.queries()["quality_pipeline"], spark, sf_dir)  # JVM/Arrow warmup
 
-    pages_path(spark, n_pages)  # generation is not timed
-    pages_pipeline_run(spark, 2000)  # warm the generated-pages path
-    pages_t, pages_kept = pages_pipeline_run(spark, n_pages)
+    pages = pages_path(spark, root, n_pages)  # generation is not timed
+    pages_pipeline_run(spark, pages_path(spark, root, WARMUP_DOCS))  # warm the generated-pages path
+    pages_t, pages_kept = pages_pipeline_run(spark, pages)
 
     # Suite queries run best-of-N (default 3) with the SQL cache cleared
     # before every run: the host shows transient multi-second stalls (one
@@ -138,12 +145,17 @@ def main() -> None:
         # fixed per-job overhead pollutes the ratio — use >= 1M docs
         scaling_pages = max(n_pages, 1_000_000)
         s = get_spark(app_name="bench-gen")
-        pages_path(s, scaling_pages)
+        scaling_path = pages_path(s, root, scaling_pages)
         s.stop()
         # Descending: the many-core level, the one sensitive to host state, runs first.
         perf = {}
         for c in sorted(cores_pair, reverse=True):
-            env = dict(os.environ, BENCH_SCALING_WORKER=str(c), BENCH_PAGES=str(scaling_pages))
+            env = dict(
+                os.environ,
+                BENCH_SCALING_WORKER=str(c),
+                BENCH_PAGES=scaling_path,
+                BENCH_PAGES_DOCS=str(scaling_pages),
+            )
             r = subprocess.run(
                 [sys.executable, os.path.abspath(__file__)], env=env, capture_output=True, text=True
             )
@@ -173,10 +185,13 @@ def main() -> None:
 
 
 def scaling_worker(c: int) -> None:
-    """One affinity-confined measurement at c cores; prints a JSON line."""
+    """One affinity-confined measurement at c cores over the pages table
+    whose path and size the parent hands over (BENCH_PAGES,
+    BENCH_PAGES_DOCS); its warm-up table lies beside it. Prints a JSON
+    line."""
     os.sched_setaffinity(0, range(c))
-    n_pages = int(os.environ["BENCH_PAGES"])
-    path = f"/tmp/bench_pages_{n_pages}.parquet"
+    path = os.environ["BENCH_PAGES"]
+    n_pages = int(os.environ["BENCH_PAGES_DOCS"])
     total = sum(
         os.path.getsize(os.path.join(path, f)) for f in os.listdir(path) if f.endswith(".parquet")
     )
@@ -187,10 +202,10 @@ def scaling_worker(c: int) -> None:
         shuffle_partitions=c,
         extra_conf={"spark.sql.files.maxPartitionBytes": str(split)},
     )
-    pages_pipeline_run(spark, 2000)  # warm JVM + python workers
+    pages_pipeline_run(spark, pages_path(spark, os.path.dirname(path), WARMUP_DOCS))  # warm JVM + python workers
     best = float("inf")
     for _ in range(2):
-        dt, _ = pages_pipeline_run(spark, n_pages)
+        dt, _ = pages_pipeline_run(spark, path)
         best = min(best, dt)
     print(json.dumps({"cores": c, "docs_per_sec": round(n_pages / best, 1), "sec": round(best, 2)}))
     spark.stop()
@@ -200,4 +215,7 @@ if __name__ == "__main__":
     if os.environ.get("BENCH_SCALING_WORKER"):
         scaling_worker(int(os.environ["BENCH_SCALING_WORKER"]))
     else:
-        main()
+        # a fresh table per run: a cache keyed on the document count alone
+        # would outlive changes to the generator and other checkouts
+        with tempfile.TemporaryDirectory(prefix="bench_pages_") as tmp:
+            main(tmp)

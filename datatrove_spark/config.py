@@ -42,6 +42,15 @@ PY_WORD_RE2 = (
     r"[^\t\n\x0b\x0c\r\x1c-\x20\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
     r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
 )
+# the characters of Python's \s (exactly those where str.isspace() is
+# true), as a DuckDB string expression: trim(t, PY_SPACE_SQL) is
+# t.strip(), where a trim set of the six ASCII spaces keeps \x1c-\x1f,
+# \x85, \xa0 and the Unicode spaces
+PY_SPACE_SQL = " || ".join(
+    f"chr({c})"
+    for c in (*range(0x09, 0x0E), *range(0x1C, 0x21), 0x85, 0xA0, 0x1680, *range(0x2000, 0x200B),
+              0x2028, 0x2029, 0x202F, 0x205F, 0x3000)
+)
 CITATION_RE = r"\[\d*\]|\[edit\]|\[citation needed\]"  # c4_filters.py:14
 # token-count regex, BPE-ish granularity (letters / digit runs / symbol runs)
 TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from datatrove_spark.config import CITATION_RE, C4QualityConfig, POLICY_SUBSTRINGS
+from datatrove_spark.config import CITATION_RE, PY_SPACE_SQL, PY_WORD_RE2, C4QualityConfig, POLICY_SUBSTRINGS
 
 NAME = "c4_quality"
 
@@ -66,7 +66,6 @@ def oracle_sql(
     text_col: str = "text",
     cfg: C4QualityConfig = C4QualityConfig(),
 ) -> str:
-    strip = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
     policy_cond = " OR ".join(f"contains(low, '{p}')" for p in POLICY_SUBSTRINGS)
     citation = CITATION_RE.replace("'", "''")
     return f"""
@@ -76,9 +75,9 @@ WITH base AS (
 ), feat AS (
   SELECT id, t,
     list_transform(lns, raw -> {{
-      'line': regexp_replace(trim(raw, {strip}), '{citation}', ''),
-      'ws_n': len(regexp_extract_all(trim(raw, {strip}), '\\S+')),
-      'too_long': len(list_filter(regexp_extract_all(trim(raw, {strip}), '\\S+'), w -> len(w) > {cfg.max_word_length})) > 0
+      'line': regexp_replace(trim(raw, {PY_SPACE_SQL}), '{citation}', ''),
+      'ws_n': len(regexp_extract_all(raw, '{PY_WORD_RE2}')),
+      'too_long': len(list_filter(regexp_extract_all(raw, '{PY_WORD_RE2}'), w -> len(w) > {cfg.max_word_length})) > 0
     }}) AS ls
   FROM base
 ), flags AS (
@@ -110,7 +109,7 @@ WITH base AS (
             f -> len(regexp_extract_all(f['line'], '[^.!?]+[.!?]+')))), 0) < {cfg.min_num_sentences}
         THEN 'too_few_sentences' END
     ) AS reason,
-    trim(array_to_string(list_transform(kept, f -> f['line']), chr(10)), {strip}) AS kept_text
+    trim(array_to_string(list_transform(kept, f -> f['line']), chr(10)), {PY_SPACE_SQL}) AS kept_text
   FROM doc
 )
 SELECT id AS {id_col}, reason AS {NAME}_reason, (reason IS NULL) AS {NAME}_keep,

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from datatrove_spark.config import FineWebQualityConfig
+from datatrove_spark.config import PY_SPACE_SQL, PY_WORD_RE2, FineWebQualityConfig
 
 NAME = "fineweb_quality"
 
@@ -53,7 +53,7 @@ def oracle_sql(
 WITH base AS (
   SELECT {id_col} AS id, t,
          string_split(t, chr(10)) AS lns,
-         list_filter(string_split(t, chr(10)), l -> trim(l, ' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)) != '') AS nel
+         list_filter(string_split(t, chr(10)), l -> trim(l, {PY_SPACE_SQL}) != '') AS nel
   FROM (SELECT {id_col}, coalesce({text_col}, '') AS t FROM {table})
 ), feat AS (
   SELECT id, t,
@@ -64,7 +64,7 @@ WITH base AS (
         i -> CASE WHEN len(list_filter(nel[1:i-1], e -> e = nel[i])) > 0 THEN len(nel[i]) ELSE 0 END)), 0) AS dup_chars,
     len(replace(t, chr(10), '')) AS t_wo_nl,
     (len(t) - len(replace(t, chr(10), ''))) AS nl_count,
-    len(regexp_extract_all(t, '\\S+')) AS n_words
+    len(regexp_extract_all(t, '{PY_WORD_RE2}')) AS n_words
   FROM base
 )
 SELECT id AS {id_col},

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType
 
-from datatrove_spark.config import GopherQualityConfig
+from datatrove_spark.config import PY_SPACE_SQL, PY_WORD_RE2, GopherQualityConfig
 
 NAME = "gopher_quality"
 
@@ -61,7 +61,7 @@ def oracle_sql(
     return f"""
 WITH base AS (
   SELECT {id_col} AS id, t,
-         regexp_extract_all(t, '\\S+') AS ws,
+         regexp_extract_all(t, '{PY_WORD_RE2}') AS ws,
          string_split(t, chr(10)) AS lns
   FROM (SELECT {id_col}, coalesce({text_col}, '') AS t FROM {table})
 ), feat AS (
@@ -75,8 +75,8 @@ WITH base AS (
     (len(t) - len(replace(t, '...', ''))) / 3 AS n_dots,
     (len(t) - len(replace(t, '…', ''))) AS n_hellip,
     len(lns) AS n_lines,
-    len(list_filter(lns, l -> regexp_matches(regexp_replace(l, '^\\s+', ''), '^(•|-)'))) AS bullet_lines,
-    len(list_filter(lns, l -> regexp_matches(regexp_replace(l, '\\s+$', ''), '(\\.\\.\\.|…)$'))) AS ellipsis_lines
+    len(list_filter(lns, l -> regexp_matches(ltrim(l, {PY_SPACE_SQL}), '^(•|-)'))) AS bullet_lines,
+    len(list_filter(lns, l -> regexp_matches(rtrim(l, {PY_SPACE_SQL}), '(\\.\\.\\.|…)$'))) AS ellipsis_lines
   FROM base
 ), r AS (
   SELECT id,

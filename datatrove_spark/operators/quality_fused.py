@@ -1,19 +1,20 @@
 """Fused quality battery — the measured hot path for the full pipeline.
 
-``battery`` is the per-document body: gopher_repetition -> gopher_quality ->
-c4_quality -> fineweb_quality over the engine's pure-Python kernels
-(reference_impl.filters), the same kernels the single-stage operators run —
-tokenize once, short-circuit in stage order, rewrite once. Two Arrow-batched
-pandas UDFs call it, so each document crosses the JVM/Python boundary once
-instead of once per stage:
+``battery_batch`` is the body: gopher_repetition -> gopher_quality ->
+c4_quality -> fineweb_quality over one Arrow batch — tokenize once,
+short-circuit in stage order, rewrite once. gopher_repetition runs as its
+batch kernel (``operators.gopher_repetition.reasons``: the n-gram checks
+once per batch); the later stages run the per-document kernels of
+reference_impl.filters, the same kernels the single-stage operators run.
+The per-document ``filters.gopher_repetition`` is the batch kernel's spec,
+checked against it by tests/test_fuzz_parity.py and by the benchmark's
+correctness gate. Two Arrow-batched pandas UDFs call the body, so each
+document crosses the JVM/Python boundary once instead of once per stage:
 
 - ``make_udf``/``apply`` here: the battery alone (the ``quality_pipeline``
   registry row, bench.py's headline, the traced benchmark layer);
 - ``plans/pipeline.canonical_stages``: langid, then the battery, then the
   PII scrub of its text, in one UDF for the whole curation flow.
-
-Arrow batching keeps the Python boundary amortized (per-BATCH Python with
-vectorized transport, not per-row).
 
 Short-circuit semantics (matches reference pipeline order, base_filter
 short-circuiting):
@@ -32,6 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from datatrove_spark.config import EngineConfig
+from datatrove_spark.operators import gopher_repetition
 from datatrove_spark.reference_impl import filters as rf
 
 NAME = "quality_fused"
@@ -41,28 +43,35 @@ RESULT_SCHEMA = StructType(
 )
 
 
-def battery(text: str | None, cfg: EngineConfig = EngineConfig()) -> tuple[str | None, str | None]:
-    """(first failing reason or None, final text) of one document through
-    the battery in stage order. The final text is the c4-rewritten text when
-    both gopher stages passed, the input text otherwise."""
-    ws = rf.words(text)  # one tokenization shared by both gopher stages
-    reason = rf.gopher_repetition(text, cfg.gopher_repetition, ws=ws)
-    new_text = text
-    if reason is None:
-        reason = rf.gopher_quality(text, cfg.gopher_quality, ws=ws)
-    if reason is None:
-        reason, new_text = rf.c4_quality(text, cfg.c4)
+def battery_batch(texts, cfg: EngineConfig = EngineConfig()) -> list[tuple[str | None, str | None]]:
+    """(first failing reason or None, final text) of every document of a
+    batch through the battery in stage order. The final text is the
+    c4-rewritten text when both gopher stages passed, the input text
+    otherwise. gopher_repetition runs as its batch kernel
+    (operators.gopher_repetition.reasons), whose spec is the per-document
+    reference_impl.filters.gopher_repetition; the later stages run per
+    document, and only on documents it keeps."""
+    texts = list(texts)
+    wss = [rf.words(t) for t in texts]  # one tokenization shared by both gopher stages
+    reasons = gopher_repetition.reasons(texts, cfg.gopher_repetition, wss)
+    out = []
+    for text, ws, reason in zip(texts, wss, reasons):
+        new_text = text
         if reason is None:
-            reason = rf.fineweb_quality(new_text, cfg.fineweb)
-    return reason, new_text
+            reason = rf.gopher_quality(text, cfg.gopher_quality, ws=ws)
+        if reason is None:
+            reason, new_text = rf.c4_quality(text, cfg.c4)
+            if reason is None:
+                reason = rf.fineweb_quality(new_text, cfg.fineweb)
+        out.append((reason, new_text))
+    return out
 
 
 def make_udf(cfg: EngineConfig = EngineConfig()):
     @F.pandas_udf(RESULT_SCHEMA)
     def quality_battery(texts: pd.Series) -> pd.DataFrame:
         reasons, outs = [], []
-        for t in texts:
-            reason, new_text = battery(t, cfg)
+        for t, (reason, new_text) in zip(texts, battery_batch(texts, cfg)):
             reasons.append(reason)
             # NULL means "unchanged": only c4-rewritten docs ship text back
             # over Arrow (apply() coalesces with the input column JVM-side).

@@ -74,17 +74,18 @@ def _done(path: str) -> bool:
 
 
 def _text_kernels_udf():
-    """One pandas UDF running, per document, langid.py_langid, the quality
-    battery and pii.scrub of the battery's final text. Returns the language,
-    the unrounded language score, the battery's reason and the scrubbed text
-    (NULL when it equals the input, so unchanged docs ship nothing back)."""
+    """One pandas UDF running langid.py_langid, the quality battery and
+    pii.scrub of the battery's final text: the battery over the Arrow batch
+    (quality_fused.battery_batch), the other two per document. Returns the
+    language, the unrounded language score, the battery's reason and the
+    scrubbed text (NULL when it equals the input, so unchanged docs ship
+    nothing back)."""
 
     @F.pandas_udf("struct<language:string, raw:double, reason:string, text:string>")
     def langid_quality_pii(texts: pd.Series) -> pd.DataFrame:
         langs, raws, reasons, outs = [], [], [], []
-        for t in texts:
+        for t, (reason, final) in zip(texts, quality_fused.battery_batch(texts, DEFAULT_CONFIG)):
             lg, raw = langid.py_langid(t)
-            reason, final = quality_fused.battery(t, DEFAULT_CONFIG)
             out = pii.scrub(final, DEFAULT_CONFIG.pii)
             langs.append(lg)
             raws.append(raw)

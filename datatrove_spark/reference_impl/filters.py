@@ -5,9 +5,11 @@ These functions re-derive the *decision rules* of the reference filters
 semantics (config.py TOKENIZER NOTE). They serve double duty:
 
 1. executor-side kernels for the Arrow-batched UDF paths
-   (operators/gopher_repetition.py, gopher_quality.py, c4_quality.py,
-   fineweb_quality.py, quality_fused.py) — one Python implementation per
-   filter;
+   (operators/gopher_quality.py, c4_quality.py, fineweb_quality.py,
+   quality_fused.py) — one Python implementation per filter. The
+   exception is gopher_repetition's n-gram checks: the executors run them
+   once per Arrow batch (operators/gopher_repetition.reasons), and the
+   per-document form here is their spec;
 2. the driver-side reference those operators are checked with: each
    operator's DuckDB oracle SQL must agree with them row for row, and
    tests/test_reference_f1.py checks them against the real reference.
@@ -88,8 +90,6 @@ def token_count(text: str) -> int:
 _WORD_PROPS: dict[str, tuple[bool, bool]] = {}
 _WORD_PROPS_CAP = 1_000_000
 _STOPSET_CACHE: dict[tuple, frozenset] = {}
-_LSTRIP_RE = re.compile(r"^\s+")
-_RSTRIP_RE = re.compile(r"\s+$")
 
 
 def gopher_quality(
@@ -137,12 +137,12 @@ def gopher_quality(
     if (text.count("...") + text.count("…")) / n_words > cfg.max_symbol_word_ratio:
         return "gopher_too_many_ellipsis"
     lns = text.split("\n")
-    bullet = sum(
-        1 for ln in lns if _LSTRIP_RE.sub("", ln).startswith(("•", "-"))
-    )
+    # str.lstrip()/rstrip() drop exactly the leading/trailing r"\s+" (Python's
+    # \s is str.isspace(); tests/test_kernel_fast_paths.py keeps the regex form)
+    bullet = sum(1 for ln in lns if ln.lstrip().startswith(("•", "-")))
     if bullet / len(lns) > cfg.max_bullet_lines_ratio:
         return "gopher_too_many_bullets"
-    ell = sum(1 for ln in lns if _RSTRIP_RE.sub("", ln).endswith(("...", "…")))
+    ell = sum(1 for ln in lns if ln.rstrip().endswith(("...", "…")))
     if ell / len(lns) > cfg.max_ellipsis_lines_ratio:
         return "gopher_too_many_end_ellipsis"
     if n_alpha / n_words < cfg.max_non_alpha_words_ratio:
@@ -150,29 +150,6 @@ def gopher_quality(
     if n_stop < cfg.min_stop_words:
         return "gopher_enough_stop_words"
     return None
-
-
-try:  # pandas internal: hash-based int64 factorizer without pd.factorize's
-    # Python dtype dispatch; guarded so a pandas relayout degrades gracefully
-    from pandas._libs.hashtable import Int64Factorizer as _Int64Factorizer
-except ImportError:  # pragma: no cover - depends on pandas version
-    _Int64Factorizer = None
-
-
-def _factorize_i64(arr):
-    """(appearance-order codes, n_distinct) for an int64 array — hash-based
-    O(m) (vs np.unique's sort O(m log m): tied at the few-hundred-gram sizes
-    typical of web pages, measured 1.45x on the full repetition check at
-    20k-word documents); falls back to the public API if the internal
-    module moves."""
-    if _Int64Factorizer is None:  # pragma: no cover - pandas relayout path
-        import numpy as np
-        import pandas as pd
-
-        codes, uq = pd.factorize(arr)
-        return codes.astype(np.int64, copy=False), len(uq)
-    f = _Int64Factorizer(len(arr))
-    return f.factorize(arr), f.get_count()
 
 
 def _ratio_gt(num: float, den: float, thr: float) -> bool:
@@ -200,179 +177,61 @@ def _find_duplicates(elements: list[str]) -> tuple[int, int]:
     return dup_n, dup_chars
 
 
-def _dup_ngram_char_frac(ws: list[str], n: int, text_len: int) -> float:
-    """Union-of-positions semantics (documented deviation from the
-    reference's sequential skip-scan, gopher_repetition_filter.py:57-70,
-    which is order-dependent and not parallelizable): characters of words
-    covered by any occurrence *after the first* of a duplicated n-gram,
-    each word counted once, divided by len(text)."""
-    if len(ws) < n:
-        return 0.0
-    grams: dict[str, int] = {}
-    occs: list[tuple[str, int]] = []
-    for i in range(len(ws) - n + 1):
-        g = " ".join(ws[i : i + n])
-        occs.append((g, i))
-        grams[g] = grams.get(g, 0) + 1
-    first: dict[str, int] = {}
-    for g, i in occs:
-        if g not in first:
-            first[g] = i
-    covered: set[int] = set()
-    for g, i in occs:
-        if grams[g] > 1 and i > first[g]:
-            covered.update(range(i, i + n))
-    dup_chars = sum(len(ws[i]) for i in covered)
-    return dup_chars / text_len
-
-
 def gopher_repetition(
     text: str,
     cfg: GopherRepetitionConfig = GopherRepetitionConfig(),
     ws: list[str] | None = None,
 ) -> str | None:
     """Provenance: gopher_repetition_filter.py:110-142 (check order kept).
-
-    Implementation notes (hot path of the fused battery — profiled at 85% of
-    quality_fused): n-grams are compared as word TUPLES, not " ".joins —
-    equivalent since words match \\S+ (no spaces), so join is bijective; this
-    avoids ~m string allocations per (doc, n). The lexicographic top-gram
-    tie-break (on the joined form, matching the SQL oracle) only runs when a
-    cheap upper bound — the longest n-window's chars x top count — could
-    actually cross the threshold; for organic text that path is rare."""
+    The driver-side spec: the executors run the batch kernel
+    operators.gopher_repetition.reasons, which must return what this
+    returns for every document (tests/test_fuzz_parity.py)."""
     text = text or ""
+    reason = repeated_blocks_reason(text, cfg)
+    if reason is None:
+        if ws is None:
+            ws = words(text)
+        if ws:
+            reason = ngram_checks(ws, len(text), cfg)
+    return reason
+
+
+def repeated_blocks_reason(text: str, cfg: GopherRepetitionConfig) -> str | None:
+    """The duplicate paragraph and line checks of gopher_repetition."""
     text_len = len(text)
-    paras = re.split(r"\n{2,}", text.strip())
+    s = text.strip()
+    # every match of \n{2,} contains "\n\n" (tests/test_kernel_fast_paths.py)
+    paras = re.split(r"\n{2,}", s) if "\n\n" in s else [s]
     dup_p, dup_p_chars = _find_duplicates(paras)
     if _ratio_gt(dup_p, len(paras), cfg.dup_para_frac):
         return "dup_para_frac"
     if _ratio_gt(dup_p_chars, text_len, cfg.dup_para_char_frac):
         return "dup_para_char_frac"
-    lns = re.split(r"\n+", text.strip())
+    # re.split(r"\n+", s): s is stripped, so the only empty pieces are the
+    # ones between consecutive newlines (tests/test_kernel_fast_paths.py)
+    lns = [x for x in s.split("\n") if x] or [""]
     dup_l, dup_l_chars = _find_duplicates(lns)
     if _ratio_gt(dup_l, len(lns), cfg.dup_line_frac):
         return "dup_line_frac"
     if _ratio_gt(dup_l_chars, text_len, cfg.dup_line_char_frac):
         return "dup_line_char_frac"
-    if ws is None:
-        ws = words(text)
-    m = len(ws)
-    if not m or not text_len:
-        return None
-    if m < 100:
-        return _ngram_checks_counter(ws, text_len, cfg)
-    return _ngram_checks_np(ws, text_len, cfg)
-
-
-_FACTORIZE_MIN_WORDS = 2048  # crossover: np.unique's sort wins below, the
-# hash factorizer above (interleaved A/B on real pages + 20k-word docs)
-
-
-def _ngram_checks_np(ws: list[str], text_len: int, cfg: GopherRepetitionConfig) -> str | None:
-    """Vectorized n-gram checks — exact, no hashing: gram identity is an
-    integer id built by pairing (id(n-gram) = group-id of (id(prefix)
-    paired with last word id)), so results are bit-identical to the
-    tuple/Counter form. The pairing's group ids come from np.unique
-    (sort-based — fastest at the few-hundred-word sizes typical of web
-    pages) below _FACTORIZE_MIN_WORDS and from the hash-based pandas
-    Int64Factorizer (O(m); first occurrences recovered from
-    appearance-order codes via one running max) above it — measured 1.36x
-    on the full repetition check at 20k-word documents with decision
-    parity on every real page, a tail-latency bound: at scale the
-    straggler doc, not the median, stalls the stage. Consumers depend
-    only on the grouping partition, per-group counts, and first
-    positions — all invariant to the sorted-vs-appearance relabeling
-    (pinned by the np-vs-Counter equivalence fuzz test). The Counter path
-    below remains faster under ~100 words, hence the outer dispatch."""
-    import numpy as np
-
-    m = len(ws)
-    wordlens = np.array(list(map(len, ws)), np.int64)  # map(len) is C-level
-    cums = np.concatenate((np.zeros(1, np.int64), np.cumsum(wordlens)))
-    # word ids via dict setdefault: measured faster than pd.factorize AND the
-    # low-level ObjectFactorizer on real pages (python str hashing dominates
-    # either way; the dict genexpr skips all array dispatch)
-    ids: dict[str, int] = {}
-    wid = np.fromiter((ids.setdefault(w, len(ids)) for w in ws), np.int64, m)
-    n_words = len(ids)
-    use_hash = m >= _FACTORIZE_MIN_WORDS and _Int64Factorizer is not None
-
-    gram_cache: dict[int, tuple] = {1: (wid, n_words, np.arange(m))}
-
-    def grams_of(n: int):
-        """(gram_ids, n_distinct, first_idx): ids per position, distinct
-        count, first-occurrence position per distinct id (first_idx[code]
-        is that gram's first position under either labeling)."""
-        if n not in gram_cache:
-            prev, _n_prev, _ = gram_cache[n - 1]
-            pair = prev[: m - n + 1] * np.int64(n_words) + wid[n - 1 :]
-            if use_hash:
-                codes, n_uq = _factorize_i64(pair)
-                cummax = np.maximum.accumulate(codes)
-                # appearance-order codes: position i is a first occurrence
-                # iff codes[i] > max(codes[:i])
-                first_idx = np.nonzero(
-                    codes > np.concatenate(([np.int64(-1)], cummax[:-1]))
-                )[0]
-            else:
-                _, first_idx, codes = np.unique(pair, return_index=True, return_inverse=True)
-                n_uq = len(first_idx)
-            gram_cache[n] = (codes, n_uq, first_idx)
-        return gram_cache[n]
-
-    for n, frac in cfg.top_n_grams:
-        if m < n:
-            continue
-        g, _, first_idx = grams_of(n)
-        counts = np.bincount(g)
-        top_count = int(counts.max())
-        max_len = int((cums[n:] - cums[:-n]).max()) + (n - 1)
-        if not _ratio_gt(max_len * top_count, text_len, frac):
-            continue  # even the longest window can't trigger
-        # deterministic tie-break: lexicographically smallest (joined form,
-        # = the SQL oracle's string ordering) among the most frequent
-        cand_pos = first_idx[np.where(counts == top_count)[0]]
-        i = min(cand_pos.tolist(), key=lambda p: " ".join(ws[p : p + n]))
-        top_len = int(cums[i + n] - cums[i]) + (n - 1)
-        if _ratio_gt(top_len * top_count, text_len, frac):
-            return f"top_{n}_gram"
-    # the first triggering size wins, in CONFIG order (reference iterates its
-    # tuple as given); the no-repeat early break is only sound when the sizes
-    # ascend, so gate it rather than reordering a custom config
-    ascending = list(cfg.dup_n_grams) == sorted(cfg.dup_n_grams)
-    for n, frac in cfg.dup_n_grams:
-        if m < n:
-            continue
-        g, _, first_idx = grams_of(n)
-        counts = np.bincount(g)
-        if int(counts.max()) < 2:
-            # a duplicated n-gram contains duplicated (n-1)-grams, so once no
-            # n-gram repeats, no larger n can repeat either (ascending order)
-            if ascending:
-                break
-            continue
-        # positions covered by any occurrence-after-the-first of a repeated
-        # n-gram: start flags -> interval difference array -> word mask
-        is_first = np.zeros(len(g), bool)
-        is_first[first_idx] = True
-        starts = np.where((counts[g] > 1) & ~is_first)[0]
-        if len(starts):
-            d = np.zeros(m + 1, np.int64)
-            np.add.at(d, starts, 1)
-            np.add.at(d, np.minimum(starts + n, m), -1)
-            mask = np.cumsum(d[:m]) > 0
-            dup_chars = int(wordlens[mask].sum())
-        else:
-            dup_chars = 0
-        if dup_chars / text_len > frac:
-            return f"duplicated_{n}_n_grams"
     return None
 
 
-def _ngram_checks_counter(ws: list[str], text_len: int, cfg: GopherRepetitionConfig) -> str | None:
-    """Tuple/Counter form of the same checks — faster below ~100 words
-    (numpy per-call overhead dominates there); semantics identical to
-    _ngram_checks_np, guarded by the equivalence fuzz test."""
+def ngram_checks(ws: list[str], text_len: int, cfg: GopherRepetitionConfig) -> str | None:
+    """The top-n and duplicated-n gram checks of gopher_repetition over a
+    non-empty word list. n-grams are compared as word tuples: words hold no
+    spaces, so " ".join is bijective on them. The top-gram tie-break is the
+    lexicographically smallest JOINED gram (the SQL oracle's string order,
+    which differs from tuple order once a word holds a character below
+    " "); it runs only when the longest window times the top count could
+    cross the threshold.
+
+    Duplicated n-grams use union-of-covered-positions semantics: the
+    characters of the words covered by any occurrence after the first of a
+    repeated n-gram, each word once. This deviates from the reference's
+    sequential skip-scan (gopher_repetition_filter.py:57-70), whose result
+    depends on scan order."""
     m = len(ws)
     cums = [0] * (m + 1)
     for i, w in enumerate(ws):

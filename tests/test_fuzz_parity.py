@@ -91,6 +91,47 @@ def fuzz_oracle(spark):
     return spark.createDataFrame(rows, "doc_id long, text string"), duck_documents(rows)
 
 
+SPACE_VOCAB = ["the", "and", "of", "that", "with", "have", "river", "market", "people", "town",
+               "summer", "walked", "bright", "garden", "stone", "north", "quietly", "built", "old", "to"]
+
+
+def space_docs() -> list[str]:
+    """Documents whose words or lines are separated or padded by
+    whitespace that Python's \\s holds and RE2's \\s or a trim of the six
+    ASCII spaces does not (\\xa0, U+3000): an oracle that tokenizes with
+    RE2's \\S+ or trims those six disagrees with the kernels on them."""
+    rng = random.Random(15)
+
+    def line(k: int, sep: str = " ") -> str:
+        return sep.join(rng.choice(SPACE_VOCAB) for _ in range(k))
+
+    return [
+        # 128 words joined by \xa0, ASCII spaces only between the 8 sentences
+        " ".join(line(16, "\xa0").capitalize() + "." for _ in range(8)),
+        " ".join(f"w{i}\u3000of\u3000the\u3000x{i}" for i in range(30)),
+        "\xa0The first paragraph is here and it is long enough.\n\n"
+        "The first paragraph is here and it is long enough.",
+        "\n".join("\xa0" + line(12) + "." for _ in range(6)),
+        "\n".join([line(12) + "." for _ in range(6)] + ["\xa0" * 8] * 3),
+        "\n".join(line(8, "\xa0") + "." for _ in range(10)),
+        "\n".join("\xa0\u3000- " + line(8) for _ in range(10)),
+        "\n".join(line(12) + " …\xa0" for _ in range(10)),
+    ]
+
+
+@pytest.fixture(scope="module")
+def space_oracle(spark):
+    rows = list(enumerate(space_docs()))
+    return spark.createDataFrame(rows, "doc_id long, text string"), duck_documents(rows)
+
+
+@pytest.mark.parametrize(
+    "op", [gopher_quality, gopher_repetition, c4_quality, fineweb_quality], ids=lambda op: op.NAME
+)
+def test_oracles_split_and_strip_like_python(op, space_oracle):
+    assert_matches_oracle(op, *space_oracle)
+
+
 def _col(df, *cols):
     return {r[0]: tuple(r[1:]) for r in df.select("doc_id", *cols).collect()}
 
@@ -175,85 +216,132 @@ def test_null_text_rows_survive_pipeline(spark):
     assert cur[4] == (" \n\t", "und", "lang_filter", "gopher_short_doc", "lang_filter")
 
 
-def test_ngram_backend_equivalence():
-    """The numpy and Counter n-gram backends must agree on every doc — the
-    m<100 dispatch in gopher_repetition must be invisible."""
-    import random
-
-    from datatrove_spark.config import GopherRepetitionConfig
-    from datatrove_spark.reference_impl.filters import (
-        _ngram_checks_counter,
-        _ngram_checks_np,
-        words,
-    )
-
+def _ngram_docs() -> list[str | None]:
+    """The n-gram shapes the batch kernel is checked on: 400 random
+    small-vocabulary documents, 12 large ones (repetition-triggering and
+    top-gram tie shapes among them), the edge documents, tie-break shapes
+    whose decision depends on comparing JOINED grams, and a 20k-word
+    document."""
     rng = random.Random(123)
     vocab = ["w%d" % i for i in range(12)] + ["the", "cat", "sat", "dog", "a"]
-    cfg = GopherRepetitionConfig()
-    for trial in range(400):
+    docs: list[str | None] = []
+    for _ in range(400):
         n = rng.randint(2, 260)
         ws = [rng.choice(vocab) for _ in range(n)]
         if rng.random() < 0.4:  # inject repetition runs
             seg = ws[: rng.randint(2, 6)]
             ws = ws + seg * rng.randint(2, 5)
-        text = " ".join(ws)
-        ws2 = words(text)
-        a = _ngram_checks_np(ws2, len(text), cfg)
-        b = _ngram_checks_counter(ws2, len(text), cfg)
-        assert a == b, f"trial {trial}: np={a} counter={b} text={text[:120]}"
-
-    # cross the _FACTORIZE_MIN_WORDS dispatch: the hash-factorizer branch
-    # (appearance-order codes + running-max first occurrences) must agree
-    # with Counter on large docs too, including repetition-triggering and
-    # top-gram tie-break shapes
-    from datatrove_spark.reference_impl.filters import _FACTORIZE_MIN_WORDS
-
+        docs.append(" ".join(ws))
     big_vocab = ["t%d" % i for i in range(900)]
     for trial in range(12):
-        n = _FACTORIZE_MIN_WORDS + rng.randint(10, 800)
-        ws = [rng.choice(big_vocab) for _ in range(n)]
+        ws = [rng.choice(big_vocab) for _ in range(2048 + rng.randint(10, 800))]
         if trial % 3 == 0:  # duplicated n-gram coverage over the threshold
             seg = ws[: rng.randint(5, 12)]
             ws = ws + seg * rng.randint(20, 40)
         if trial % 3 == 1:  # top-gram tie: two distinct grams at max count
             ws += ["zz", "aa"] * 50 + ["bb", "cc"] * 50
-        text = " ".join(ws)
-        ws2 = words(text)
-        assert len(ws2) >= _FACTORIZE_MIN_WORDS
-        a = _ngram_checks_np(ws2, len(text), cfg)
-        b = _ngram_checks_counter(ws2, len(text), cfg)
-        assert a == b, f"big trial {trial}: np={a} counter={b}"
+        docs.append(" ".join(ws))
+    # NULL, empty, whitespace-only, one word, fewer words than the gram sizes
+    docs += [None, "", " \n\t", "word", "a b", "a b a", "a b c d", "x y x y"]
+    docs += [" ".join(["a", "b", "c", "d"][: k] * 2) for k in range(1, 5)]
+    docs += _tie_docs()
+    # one segment of distinct words repeated among distinct words: the later
+    # copy's coverage ratio, under every top-gram threshold, crosses the
+    # duplicated-n thresholds (0.15 at n=5 down to 0.10 at n=10) at
+    # different n; a short segment repeated many times covers overlapping
+    # windows
+    uniq = iter("u%d" % i for i in range(10**6))
+    for seg_len in range(5, 41, 3):
+        seg = [next(uniq) for _ in range(seg_len)]
+        head = [next(uniq) for _ in range(rng.randint(40, 150))]
+        docs.append(" ".join(head[:20] + seg + head[20:] + seg))
+        short = [next(uniq) for _ in range(rng.randint(5, 8))]
+        docs.append(" ".join(head + (short + [next(uniq)]) * 3 + short))
+    # a document ending in "a" before one starting with "b": "a b" occurs 10
+    # times in the first, and an 11th, crossing the boundary, would fire top-2
+    docs.append(" ".join(f"a b {i:02d} {i + 10:02d} {i + 20:02d} {i + 30:02d}" for i in range(10)) + " a")
+    docs.append("b c")
+    docs.append(" ".join(rng.choice(big_vocab) for _ in range(20_000)))
+    return docs
+
+
+def _tie_docs() -> list[str]:
+    """Top-2 ties between "a b" (3 chars) and "a\\x01 b" (4): "a\\x01 b" is the
+    smaller joined string (\\x01 sorts before " "), ("a", "b") the smaller
+    tuple. In the first shapes the threshold falls between the two lengths,
+    so only the joined-order winner fires."""
+    docs = []
+    for ctl in ("\x01", "\x1b"):
+        for k, flen in ((4, 3), (5, 3), (4, 4)):
+            fill = ["%0*d" % (flen, i) for i in range(2 * k)]
+            ws = []
+            for i in range(k):
+                ws += ["a", "b", fill[2 * i], "a" + ctl, "b", fill[2 * i + 1]]
+            docs.append(" ".join(ws))
+    return docs
+
+
+def _batches(docs: list, seed: int) -> list[list]:
+    """`docs` shuffled and cut into batches of mixed sizes."""
+    rng = random.Random(seed)
+    docs = docs[:]
+    rng.shuffle(docs)
+    out, i = [], 0
+    while i < len(docs):
+        k = rng.choice([1, 2, 7, 40, 150])
+        out.append(docs[i : i + k])
+        i += k
+    return out
+
+
+def test_ngram_backend_equivalence():
+    """The batch kernel (operators.gopher_repetition.reasons) returns what
+    the per-document Counter spec returns, on every document of every mixed
+    batch: gram keys never cross a document's end, and the top-gram
+    tie-break compares joined grams."""
+    from datatrove_spark.operators.gopher_repetition import reasons
+
+    docs = _ngram_docs()
+    want = {id(t): ref.gopher_repetition(t) for t in docs}
+    # the first tie shape's threshold only the joined-order winner crosses
+    assert ref.gopher_repetition(_tie_docs()[0]) == "top_2_gram"
+    fired = set()
+    for batch in _batches(docs, 0) + _batches(docs, 1) + [docs]:
+        for t, r in zip(batch, reasons(batch)):
+            assert r == want[id(t)], f"{r} != {want[id(t)]}: {(t or '')[:120]!r}"
+            fired.add(r)
+    assert fired == {None} | {f"top_{n}_gram" for n in (2, 3, 4)} | {
+        f"duplicated_{n}_n_grams" for n in range(5, 11)
+    }
 
 
 def test_factorize_public_api_fallback(monkeypatch):
     """If pandas' internal Int64Factorizer ever moves: (a) _factorize_i64's
     pd.factorize fallback must produce the identical appearance-order codes,
-    and (b) _ngram_checks_np must degrade to the np.unique branch with
-    unchanged decisions."""
-    import random
-
+    and (b) the batch kernel must keep its decisions on it."""
     import numpy as np
 
-    from datatrove_spark.config import GopherRepetitionConfig
-    from datatrove_spark.reference_impl import filters as rf
+    from datatrove_spark.operators import gopher_repetition as gr
 
     rng = random.Random(7)
     arr = np.array([rng.randrange(500) for _ in range(3000)], dtype=np.int64)
-    codes_internal, n_internal = rf._factorize_i64(arr)
-    monkeypatch.setattr(rf, "_Int64Factorizer", None)
-    codes_public, n_public = rf._factorize_i64(arr)
+    codes_internal, n_internal = gr._factorize_i64(arr)
+    empty_internal = gr._factorize_i64(np.zeros(0, np.int64))
+    monkeypatch.setattr(gr, "_Int64Factorizer", None)
+    codes_public, n_public = gr._factorize_i64(arr)
     assert n_internal == n_public
     assert np.array_equal(codes_internal, codes_public)
+    empty_public = gr._factorize_i64(np.zeros(0, np.int64))
+    assert empty_internal[1] == empty_public[1] == 0 == len(empty_public[0])
 
     vocab = ["t%d" % i for i in range(700)]
-    ws = [rng.choice(vocab) for _ in range(rf._FACTORIZE_MIN_WORDS + 200)]
+    ws = [rng.choice(vocab) for _ in range(2248)]
     ws += ws[:9] * 30  # a repetition-triggering tail
-    text = " ".join(ws)
-    cfg = GopherRepetitionConfig()
-    without_internal = rf._ngram_checks_np(ws, len(text), cfg)  # np.unique branch
+    batch = [" ".join(ws)] + _ngram_docs()
+    without_internal = gr.reasons(batch)
     monkeypatch.undo()
-    assert rf._ngram_checks_np(ws, len(text), cfg) == without_internal
-    assert without_internal == rf._ngram_checks_counter(ws, len(text), cfg)
+    assert gr.reasons(batch) == without_internal
+    assert without_internal == [ref.gopher_repetition(t) for t in batch]
 
 
 def test_sentences_linear_scan_matches_regex():

@@ -1,8 +1,11 @@
 """The per-document kernels skip work that cannot change their output:
 `filters.words` and `py_langid` tokenize with `str.split()`, `py_langid`
-skips its script scans on ASCII text, and `pii.scrub` runs each
-substitution only on text that could hold a match. The pre-change forms
-live here, as the spec the fast paths must reproduce exactly. Spark-free."""
+skips its script scans on ASCII text, `pii.scrub` runs each substitution
+only on text that could hold a match, `gopher_quality` strips its lines
+with `str.lstrip()`/`rstrip()`, and `gopher_repetition` splits lines with
+`str.split("\\n")` and paragraphs only when the text holds "\\n\\n". The
+pre-change forms live here, as the spec the fast paths must reproduce
+exactly. Spark-free."""
 
 from __future__ import annotations
 
@@ -11,7 +14,7 @@ import re
 
 import pytest
 
-from datatrove_spark.config import PY_WORD_RE2, PIIConfig
+from datatrove_spark.config import PY_SPACE_SQL, PY_WORD_RE2, GopherRepetitionConfig, PIIConfig
 from datatrove_spark.operators import langid, pii
 from datatrove_spark.reference_impl import filters as rf
 from tests.test_fuzz_parity import gen_docs
@@ -28,6 +31,8 @@ WS_POOL = (
 )
 # the characters emails and dotted quads are made of
 PII_POOL = "ab@.-_1925 0\n[]"
+# line and paragraph breaks among whitespace that is and is not \s
+BLOCK_POOL = "\n\n\n \t\r\x85\xa0\u3000\x1cab•-.…"
 
 
 def _random_strings(pool: str = WS_POOL, n: int = 2000) -> list[str]:
@@ -117,6 +122,22 @@ def test_py_word_re2_is_split_in_duckdb():
     assert words(r"\S+") != every.split()
 
 
+def test_py_space_sql_is_strip_in_duckdb():
+    """trim(t, config.PY_SPACE_SQL) in DuckDB is Python's t.strip(); the six
+    ASCII spaces are not."""
+    import duckdb
+
+    spaces = "".join(c for c in map(chr, range(0x110000)) if c.isspace())
+    texts = [spaces + "a" + spaces + "b" + spaces, "\xa0\u3000x\x85", "\x1cy\x1f", "", " "]
+    ascii6 = "' ' || chr(9) || chr(10) || chr(13) || chr(11) || chr(12)"
+    for t in texts:
+        row = duckdb.execute(
+            f"SELECT trim(?, {PY_SPACE_SQL}), ltrim(?, {PY_SPACE_SQL}), rtrim(?, {PY_SPACE_SQL})", [t, t, t]
+        ).fetchone()
+        assert row == (t.strip(), t.lstrip(), t.rstrip()), repr(t)
+    assert duckdb.execute(f"SELECT trim(?, {ascii6})", [texts[0]]).fetchone()[0] != texts[0].strip()
+
+
 def test_words_matches_s_plus_findall():
     for t in gen_docs() + _random_strings() + [None]:
         assert rf.words(t) == _S_PLUS.findall(t or ""), repr(t)
@@ -184,3 +205,39 @@ def test_py_langid_matches_pre_change_form():
     )
     for t in texts:
         assert langid.py_langid(t) == _spec_langid(t), repr(t)
+
+
+def _spec_repeated_blocks_reason(text: str, cfg: GopherRepetitionConfig) -> str | None:
+    """`filters.repeated_blocks_reason` before its fast paths: both splits
+    by regex."""
+    text_len = len(text)
+    paras = re.split(r"\n{2,}", text.strip())
+    dup_p, dup_p_chars = rf._find_duplicates(paras)
+    if rf._ratio_gt(dup_p, len(paras), cfg.dup_para_frac):
+        return "dup_para_frac"
+    if rf._ratio_gt(dup_p_chars, text_len, cfg.dup_para_char_frac):
+        return "dup_para_char_frac"
+    lns = re.split(r"\n+", text.strip())
+    dup_l, dup_l_chars = rf._find_duplicates(lns)
+    if rf._ratio_gt(dup_l, len(lns), cfg.dup_line_frac):
+        return "dup_line_frac"
+    if rf._ratio_gt(dup_l_chars, text_len, cfg.dup_line_char_frac):
+        return "dup_line_char_frac"
+    return None
+
+
+def test_line_strips_and_splits_match_regex():
+    crafted = ["a\n\na", "\n\n a \n\n\n a \n", "p\nq\n\np\nq", "x\n\n\ny\n\nx", "\xa0\n\n\xa0", "\n\n\n"]
+    texts = gen_docs() + crafted + _random_strings() + _random_strings(BLOCK_POOL)
+    for t in texts:
+        for ln in t.split("\n"):  # gopher_quality's bullet and end-ellipsis lines
+            assert ln.lstrip() == re.sub(r"^\s+", "", ln), repr(ln)
+            assert ln.rstrip() == re.sub(r"\s+$", "", ln), repr(ln)
+    cfgs = [GopherRepetitionConfig(), GopherRepetitionConfig(dup_line_frac=0.0, dup_para_frac=0.0)]
+    fired = set()
+    for t in texts:
+        for cfg in cfgs:
+            want = _spec_repeated_blocks_reason(t, cfg)
+            assert rf.repeated_blocks_reason(t, cfg) == want, repr(t)
+            fired.add(want)
+    assert {"dup_para_frac", "dup_line_frac", None} <= fired
